@@ -164,7 +164,7 @@ def test_fold_overlays_consolidate_and_reader_plans_survive(spark, coll):
     assert _index_rows(spark, coll.path) == want
     # retired overlays age out with the generation retention window;
     # live overlays and the base generation survive the sweep
-    coll._gc_index_generations(retention_s=0.0)
+    coll._gc_generations("index", retention_s=0.0)
     live_dirs = {
         v for v in coll._meta()["index_fold_overrides"].values() if v
     }
@@ -176,7 +176,7 @@ def test_fold_overlays_consolidate_and_reader_plans_survive(spark, coll):
     # a full rebuild resets the overlay map and retires its dirs
     coll.build_indexes(nlist=8, m=4, nbits=4)
     assert coll._meta()["index_fold_overrides"] == {}
-    coll._gc_index_generations(retention_s=0.0)
+    coll._gc_generations("index", retention_s=0.0)
     assert not any(
         d.startswith("index_fold") for d in os.listdir(coll.path)
     )
@@ -636,8 +636,10 @@ class TestRebuildUnderIngest:
         and once superseded past the window, GC reclaims it."""
         import os as _os
 
-        for nlist in (8, 8, 8):
-            coll.build_indexes(nlist=nlist, m=4, nbits=4)
+        # the first build is OPQ: the later non-OPQ swaps must retire
+        # its rotation dir with its generation, not keep it live
+        for use_opq in (True, False, False):
+            coll.build_indexes(nlist=8, m=4, nbits=4, use_opq=use_opq)
         names = {
             d for d in _os.listdir(coll.path) if d.startswith("index_stable")
         }
@@ -649,12 +651,15 @@ class TestRebuildUnderIngest:
         assert len(coll._meta()["index_gen_history"]) >= 2
         # age every superseded generation past the window: GC reclaims
         # them and prunes the manifest history; the live one survives
-        coll._gc_index_generations(retention_s=0.0)
+        coll._gc_generations("index", retention_s=0.0)
         names = {
             d for d in _os.listdir(coll.path) if d.startswith("index_stable")
         }
         assert names == {live}
         assert coll._meta()["index_gen_history"] == []
+        assert not any(
+            d.startswith("index_rotation_g") for d in _os.listdir(coll.path)
+        )
 
     def test_prebuilt_reader_plan_survives_swap_and_gc(self, spark, coll):
         """An in-flight reader that resolved its generation paths just

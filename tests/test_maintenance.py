@@ -236,7 +236,7 @@ class TestSnapshotVersionRetention:
             c.compact()
         assert plan.count() == 100  # the superseded version still reads
         # aging the window reclaims everything but the live version
-        c._gc_snapshot_versions(retention_s=0.0)
+        c._gc_generations("snapshot", retention_s=0.0)
         import os as _os
 
         vers = [d for d in _os.listdir(c.path) if d.startswith("current_v")]
@@ -271,7 +271,11 @@ class TestSnapshotVersionRetention:
 
         vers = {d for d in _os.listdir(c.path) if d.startswith("current_v")}
         live = c._current_dir().rsplit("/", 1)[-1]
-        retained = {h["dir"] for h in c._meta().get("snapshot_gen_history", [])}
+        retained = {
+            p
+            for h in c._meta().get("snapshot_gen_history", [])
+            for p in h["paths"]
+        }
         assert vers == {live} | retained
 
 
@@ -292,7 +296,7 @@ class TestIvfGenerationRetention:
         # fresh queries resolve the live generation
         assert c.topk_ivf(q, k=5, nprobe=8).count() == q.count() * 5
         # aging out the window leaves only the live generation's dirs
-        c._gc_ivf_generations(retention_s=0.0)
+        c._gc_generations("ivf", retention_s=0.0)
         import os as _os
 
         ivf_dirs = [
@@ -413,7 +417,7 @@ class TestTagDictGenerationRetention:
         assert all(after[t] == i for t, i in before.items())
         assert len(after) > len(before)
         # ...and aging the window out leaves exactly the live dir
-        c._gc_tag_dict_generations(retention_s=0.0)
+        c._gc_generations("tag_dict", retention_s=0.0)
         import os as _os
 
         dirs = [d for d in _os.listdir(c.path) if d.startswith("tag_dict")]

@@ -114,6 +114,19 @@ def test_collection_time_travel(spark, tmp_path_factory, sf_dir):
     log = synthetic_changelog(spark, sf_dir)
     c.ingest(log.filter(F.col("op") != "DELETE"))
     c.ingest(log.filter(F.col("op") == "DELETE"))
+
+    def head_identity():
+        # the collection-level time-travel identity: at the head of
+        # history visible_as_of equals the plain visible view
+        head = c.changelog().agg(F.max("epoch")).first()[0]
+        a = {tuple(r) for r in c.current().select("id", "epoch").collect()}
+        b = {
+            tuple(r)
+            for r in c.visible_as_of(head).select("id", "epoch").collect()
+        }
+        assert a and a == b
+
+    head_identity()  # tail only, before the first compact
     deleted_id = 3  # id % 10 == 3 → DELETEd at epoch 200_003
     assert c.current().filter(F.col("id") == deleted_id).count() == 0
     past = c.visible_as_of(DELETE_EPOCH - 1)
@@ -129,6 +142,14 @@ def test_collection_time_travel(spark, tmp_path_factory, sf_dir):
     assert removed > 0
     with _pytest.raises(ValueError):
         c.visible_as_of(DELETE_EPOCH - 1)
+    # snapshot + tail: one more batch above the snapshot epoch re-upserts
+    # a slice of ids (deleted ones among them)
+    c.ingest(
+        log.filter((F.col("op") != "DELETE") & (F.col("id") % 7 == 0))
+        .withColumn("op", F.lit("UPSERT"))
+        .withColumn("epoch", F.col("epoch") + 10**6)
+    )
+    head_identity()
 
 
 def test_time_travel_at_head_equals_visible(spark, sf_dir):

@@ -76,9 +76,11 @@ def test_kill_mid_compaction_recovers(spark, tmp_path, kill_point):
     live = c._current_dir().rsplit("/", 1)[-1]
     vers = {d.rsplit("/", 1)[-1] for d in c.fs.list_dirs(c.path) if "current_v" in d}
     assert live in vers
-    retained = {h["dir"] for h in c._meta().get("snapshot_gen_history", [])}
+    retained = {
+        p for h in c._meta().get("snapshot_gen_history", []) for p in h["paths"]
+    }
     assert vers == {live} | retained  # nothing unaccounted (no crash debris)
-    c._gc_snapshot_versions(retention_s=0.0)
+    c._gc_generations("snapshot", retention_s=0.0)
     vers = [d for d in c.fs.list_dirs(c.path) if "current_v" in d]
     assert len(vers) == 1
 

@@ -25,6 +25,7 @@ import os
 import threading
 import time
 from contextlib import contextmanager
+from typing import NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -82,6 +83,47 @@ INDEX_GEN_RETENTION_S = float(
 # between rebuilds. Consolidation cost is O(overridden lists) — paid
 # once per cap-many folds, never O(index).
 FOLD_DIRS_MAX = int(os.environ.get("SPARK_GRAFT_FOLD_DIRS_MAX", "6"))
+
+
+class _GenKind(NamedTuple):
+    history: str  # manifest key of the superseded-generation history
+    pointers: tuple[str, ...]  # manifest keys naming the live dirs
+    prefixes: tuple[str, ...]  # dir-name prefixes the kind's sweep owns
+
+
+# The four generation-versioned artifacts. Each swap retires what it
+# superseded into the kind's history as {"paths", "superseded_at"}; GC
+# keeps the live dirs plus every entry younger than gen_retention_s and
+# sweeps the rest of the kind's prefixes. The snapshot's live dir is
+# the `_CURRENT` target; the stable index also keeps its live and
+# pending fold overlays.
+_GEN_KINDS = {
+    "snapshot": _GenKind("snapshot_gen_history", (), ("current_v",)),
+    "tag_dict": _GenKind(
+        "tag_dict_gen_history", ("tag_dict_path",), ("tag_dict_g",)
+    ),
+    "ivf": _GenKind(
+        "ivf_gen_history",
+        ("ivf_index_path", "ivf_centroids_path"),
+        ("index_ivf_g", "index_centroids_ivf_g"),
+    ),
+    "index": _GenKind(
+        "index_gen_history",
+        (
+            "index_stable_path",
+            "index_centroids_path",
+            "index_codebooks_path",
+            "index_rotation_path",
+        ),
+        (
+            "index_stable_g",
+            "index_centroids_stable_g",
+            "index_codebooks_g",
+            "index_rotation_g",
+            "index_fold_g",
+        ),
+    ),
+}
 
 
 class IndexVacuumedError(ValueError):
@@ -271,7 +313,7 @@ class VectorCollection:
         and PRE-REGISTER it in the manifest's `index_fold_pending` map
         (dir → reservation time) BEFORE anything is written to it.
         Registration-before-write is what makes concurrent GC safe: a
-        rebuild's post-swap `_gc_index_generations` sweep keeps every
+        rebuild's post-swap `_gc_generations("index")` sweep keeps every
         pending dir, so it can never delete an overlay a concurrent
         fold is mid-writing (folds run BESIDE rebuilds as of round 13).
         The fold's final manifest advance moves the entry from pending
@@ -287,25 +329,72 @@ class VectorCollection:
             m["index_fold_seq"] = nxt
             sub = f"index_fold_g{nxt}"
             pend = dict(m.get("index_fold_pending", {}))
-            hist = list(m.get("index_gen_history", []))
-            if "index_gen_history" not in m and m.get("index_prev_keep"):
-                # legacy manifest: installing a history would drop the
-                # prev_keep fallback from the GC keep-set — carry it in
-                hist.append(
-                    {"paths": list(m["index_prev_keep"]), "superseded_at": now}
-                )
             stale_cut = max(self.gen_retention_s, 3600.0)
-            for d, t0 in list(pend.items()):
-                if now - float(t0) > stale_cut:
-                    pend.pop(d)
-                    hist.append({"paths": [d], "superseded_at": now})
+            stale = [d for d, t0 in pend.items() if now - float(t0) > stale_cut]
+            for d in stale:
+                pend.pop(d)
+            self._retire(m, "index", stale, now)
             pend[sub] = now
             m["index_fold_pending"] = pend
-            m["index_gen_history"] = hist
             out["sub"] = sub
 
         self._meta_mutate(_mut)
         return out["sub"]
+
+    @staticmethod
+    def _retire(m: dict, kind: str, paths: list, now: float) -> None:
+        """Append the dirs a swap superseded to `kind`'s retention
+        history (inside a `_meta_mutate` transform); unset pointers are
+        skipped and an empty retirement writes nothing."""
+        paths = [p for p in paths if p]
+        if paths:
+            key = _GEN_KINDS[kind].history
+            m[key] = list(m.get(key, [])) + [
+                {"paths": paths, "superseded_at": now}
+            ]
+
+    def _gc_generations(self, kind: str, retention_s: float | None = None) -> int:
+        """Time-based retention for one versioned artifact kind (ADVICE
+        r11 medium — default `self.gen_retention_s`): history entries
+        superseded longer than `retention_s` are pruned from the
+        manifest atomically, then every dir under the kind's prefixes
+        that is neither live nor still in the history is removed. A
+        superseded generation is deletable only once no reader could
+        still hold its paths, which makes GC safe to run on EVERY swap
+        (the auto-build ladder swaps several times in seconds). Crashed
+        half-written dirs carry no history entry and go immediately.
+        Runs only at the kind's own swap sites: another kind's sweep
+        would not know this kind's in-flight build dirs. Returns the
+        number of dirs removed."""
+        if retention_s is None:
+            retention_s = self.gen_retention_s
+        spec = _GEN_KINDS[kind]
+        now = time.time()
+
+        def _trim(m: dict) -> None:
+            m[spec.history] = [
+                h
+                for h in m.get(spec.history, [])
+                if now - float(h.get("superseded_at", now)) < retention_s
+            ]
+
+        meta = self._meta_mutate(_trim)
+        keep = {meta.get(p) for p in spec.pointers}
+        if kind == "snapshot":
+            cur = self._current_dir()
+            keep.add(cur.rsplit("/", 1)[-1] if cur else None)
+        elif kind == "index":
+            # live fold overlays (round 13) plus pending dirs a
+            # concurrent fold is mid-writing — pre-registered under the
+            # writer lock precisely so this sweep (which a rebuild runs
+            # WHILE folds continue) never reaps an overlay between its
+            # write and its manifest advance
+            keep |= set((meta.get("index_fold_overrides") or {}).values())
+            keep |= set(meta.get("index_fold_pending") or {})
+        for h in meta.get(spec.history, []):
+            keep |= set(h.get("paths", ()))
+        keep.discard(None)
+        return self.fs.cleanup_dirs(self.path, spec.prefixes, keep=keep)
 
     def _meta(self) -> dict:
         if self.fs.exists(self._meta_path):
@@ -315,15 +404,13 @@ class VectorCollection:
     def tag_dict(self, meta: dict | None = None) -> DataFrame | None:
         """The collection's string→id tag dictionary (config.h:122-123),
         or None if only int tags were ever ingested. Resolved through
-        the manifest pointer (round 12 generation versioning); legacy
-        collections fall back to the unversioned dir."""
+        the manifest pointer (round 12 generation versioning)."""
         if meta is None:
             meta = self._meta()
         sub = meta.get("tag_dict_path")
-        p = f"{self.path}/{sub}" if sub else f"{self.path}/tag_dict"
-        if not self.fs.isdir(p):
+        if not sub or not self.fs.isdir(f"{self.path}/{sub}"):
             return None
-        return self.spark.read.parquet(p)
+        return self.spark.read.parquet(f"{self.path}/{sub}")
 
     def _encode_string_tags(self, batch: DataFrame) -> DataFrame:
         """String-tag ingest edge: extend the persisted dictionary with
@@ -360,51 +447,12 @@ class VectorCollection:
             swap_t = time.time()
 
             def _swap(m: dict) -> None:
-                prev = m.get("tag_dict_path")
-                if prev is None and self.fs.isdir(f"{self.path}/tag_dict"):
-                    prev = "tag_dict"  # legacy unversioned dir
-                hist = list(m.get("tag_dict_gen_history", []))
-                if prev:
-                    hist.append({"paths": [prev], "superseded_at": swap_t})
-                m.update(
-                    tag_dict_build_id=gen,
-                    tag_dict_path=sub,
-                    tag_dict_gen_history=hist,
-                )
+                self._retire(m, "tag_dict", [m.get("tag_dict_path")], swap_t)
+                m.update(tag_dict_build_id=gen, tag_dict_path=sub)
 
             self._meta_mutate(_swap)
-        self._gc_tag_dict_generations()
+        self._gc_generations("tag_dict")
         return TG.encode_tags(batch, self.tag_dict(), id_col="id", tags_col="tags")
-
-    def _gc_tag_dict_generations(self, retention_s: float | None = None) -> None:
-        """Time-based retention over the `tag_dict*` namespace — the
-        shared contract of every versioned artifact in this collection
-        (snapshots, stable index, plain-IVF index)."""
-        if retention_s is None:
-            retention_s = self.gen_retention_s
-        now = time.time()
-
-        def _trim(m: dict) -> None:
-            if "tag_dict_gen_history" not in m:
-                return
-            m["tag_dict_gen_history"] = [
-                h
-                for h in m["tag_dict_gen_history"]
-                if now - float(h.get("superseded_at", now)) < retention_s
-            ]
-
-        meta = self._meta_mutate(_trim)
-        keep = set()
-        if meta.get("tag_dict_path"):
-            keep.add(meta["tag_dict_path"])
-        for h in meta.get("tag_dict_gen_history", []):
-            keep |= set(h.get("paths", []))
-        for d in self.fs.list_dirs(self.path):
-            name = d.rstrip("/").rsplit("/", 1)[-1]
-            if name in keep:
-                continue
-            if name == "tag_dict" or name.startswith("tag_dict_g"):
-                self.fs.rmtree(d)
 
     def ingest(self, batch: DataFrame, dedup: bool = True) -> int:
         """Append a batch of ops to the changelog.
@@ -546,15 +594,24 @@ class VectorCollection:
         shuffle of the table at every read. Tail epochs are strictly
         greater than snapshot epochs, so tail-latest always wins."""
         snap_epoch = self._snapshot_epoch()
+        if snap_epoch >= 0:
+            return self._snapshot_tail_view(snap_epoch)
         if not self._has_changelog_files():
-            if snap_epoch < 0:
-                raise ValueError(f"collection at {self.path} is empty")
-            return self.spark.read.parquet(self._current_dir())
-        tail = self.changelog()
-        if snap_epoch < 0:
-            return C.visible(tail)
+            raise ValueError(f"collection at {self.path} is empty")
+        return C.visible(self.changelog())
+
+    def _snapshot_tail_view(
+        self, snap_epoch: int, as_of_epoch: int | None = None
+    ) -> DataFrame:
+        """The snapshot ∪ tail merge shared by current() (no upper
+        bound) and visible_as_of() (tail truncated at `as_of_epoch`)."""
         snapshot = self.spark.read.parquet(self._current_dir())
-        tail = tail.filter(F.col("epoch") > snap_epoch)
+        if not self._has_changelog_files():
+            return snapshot
+        in_tail = F.col("epoch") > snap_epoch
+        if as_of_epoch is not None:
+            in_tail = in_tail & (F.col("epoch") <= as_of_epoch)
+        tail = self.changelog().filter(in_tail)
         tail_latest = C.latest_by_id(tail)
         # the anti-join needs only the tail's id SET (fences excluded,
         # same as latest_by_id's up-front drop — a FENCE can share a
@@ -597,27 +654,7 @@ class VectorCollection:
         """
         snap_epoch = self._snapshot_epoch()
         if as_of_epoch >= snap_epoch >= 0:
-            snapshot = self.spark.read.parquet(self._current_dir())
-            if not self._has_changelog_files():
-                return snapshot
-            tail = self.changelog().filter(
-                (F.col("epoch") > snap_epoch) & (F.col("epoch") <= as_of_epoch)
-            )
-            tail_latest = C.latest_by_id(tail)
-            # same distinct-ids anti-join as current() (fences excluded):
-            # the id set is identical and the window no longer runs
-            # twice per view
-            survivors = snapshot.join(
-                F.broadcast(
-                    tail.filter(F.col("op") != "FENCE").select("id").distinct()
-                ),
-                "id",
-                "left_anti",
-            )
-            return survivors.unionByName(
-                tail_latest.filter(F.col("op") != "DELETE"),
-                allowMissingColumns=True,
-            ).select(*snapshot.columns)
+            return self._snapshot_tail_view(snap_epoch, as_of_epoch)
         vacuum_epoch = int(self._meta().get("vacuum_epoch", -1))
         if not self._has_changelog_files() or as_of_epoch < vacuum_epoch:
             raise ValueError(
@@ -706,10 +743,7 @@ class VectorCollection:
             # GC-everything-but-current rule rmtree'd it out from under
             # such a plan, the exact in-flight-reader hazard ADVICE r11
             # flagged for index generations
-            if prev_ver:
-                meta["snapshot_gen_history"] = list(
-                    meta.get("snapshot_gen_history", [])
-                ) + [{"dir": prev_ver, "superseded_at": swap_t}]
+            self._retire(meta, "snapshot", [prev_ver], swap_t)
 
         self._meta_mutate(_wa)
         # refresh planner stats off the snapshot just written — the CBO
@@ -718,33 +752,7 @@ class VectorCollection:
         self.analyze(self.spark.read.parquet(new_dir))
         # GC superseded snapshot versions past retention, plus crashed
         # half-written ones (never pointed to, so never in the history)
-        self._gc_snapshot_versions()
-
-    def _gc_snapshot_versions(self, retention_s: float | None = None) -> int:
-        """Remove `current_v*` snapshot versions that are neither live
-        nor within the retention window since their supersession
-        (`gen_retention_s`, shared with index generations). Crashed
-        half-written versions — dirs the pointer never named — carry no
-        history entry and are reclaimed immediately. Returns the number
-        of dirs removed."""
-        if retention_s is None:
-            retention_s = self.gen_retention_s
-        now = time.time()
-
-        def _trim(m: dict) -> None:
-            if "snapshot_gen_history" not in m:
-                return
-            m["snapshot_gen_history"] = [
-                h
-                for h in m["snapshot_gen_history"]
-                if now - float(h.get("superseded_at", now)) < retention_s
-            ]
-
-        meta = self._meta_mutate(_trim)
-        cur = self._current_dir()
-        keep = {cur.rsplit("/", 1)[-1]} if cur else set()
-        keep |= {h["dir"] for h in meta.get("snapshot_gen_history", [])}
-        return self.fs.cleanup_dirs(self.path, "current_", keep=keep)
+        self._gc_generations("snapshot")
 
     def vacuum(self, retain_for_index: bool = True) -> int:
         """Retention: delete changelog files fully covered by the current
@@ -875,24 +883,20 @@ class VectorCollection:
         swap_t = time.time()
 
         def _swap(m: dict) -> None:
-            superseded = [
-                m.get("ivf_index_path", "index_ivf"),
-                m.get("ivf_centroids_path", "index_centroids"),
-            ]
-            hist = list(m.get("ivf_gen_history", []))
-            hist.append({"paths": superseded, "superseded_at": swap_t})
+            self._retire(
+                m, "ivf", [m.get(p) for p in _GEN_KINDS["ivf"].pointers], swap_t
+            )
             m.update(
                 ivf_build_id=gen,
                 ivf_index_path=idx_sub,
                 ivf_centroids_path=cents_sub,
-                ivf_gen_history=hist,
             )
             if corr is not None:
                 m["corr_stats"] = corr
                 m["corr_stats_fresh"] = True
 
         self._meta_mutate(_swap)
-        self._gc_ivf_generations()
+        self._gc_generations("ivf")
 
     def _ivf_index_path(self, meta: dict | None = None) -> str:
         """Live plain-IVF index dir via the manifest pointer (round 12);
@@ -905,42 +909,6 @@ class VectorCollection:
         return f"{self.path}/" + (self._meta() if meta is None else meta).get(
             "ivf_centroids_path", "index_centroids"
         )
-
-    def _gc_ivf_generations(self, retention_s: float | None = None) -> None:
-        """Time-based retention for superseded plain-IVF generations —
-        the same contract as _gc_index_generations / _gc_snapshot_
-        versions, over the `index_ivf*` / `index_centroids_ivf*`
-        namespaces (the stable index's dirs are never touched here)."""
-        if retention_s is None:
-            retention_s = self.gen_retention_s
-        now = time.time()
-
-        def _trim(m: dict) -> None:
-            if "ivf_gen_history" not in m:
-                return
-            m["ivf_gen_history"] = [
-                h
-                for h in m["ivf_gen_history"]
-                if now - float(h.get("superseded_at", now)) < retention_s
-            ]
-
-        meta = self._meta_mutate(_trim)
-        keep = {
-            meta.get("ivf_index_path", "index_ivf"),
-            meta.get("ivf_centroids_path", "index_centroids"),
-        }
-        for h in meta.get("ivf_gen_history", []):
-            keep |= set(h.get("paths", []))
-        for d in self.fs.list_dirs(self.path):
-            name = d.rstrip("/").rsplit("/", 1)[-1]
-            if name in keep:
-                continue
-            if (
-                name == "index_ivf"
-                or name.startswith("index_ivf_g")
-                or name.startswith("index_centroids_ivf_g")
-            ):
-                self.fs.rmtree(d)
 
     def build_indexes(
         self,
@@ -1019,18 +987,6 @@ class VectorCollection:
             train_pq_codebooks_kmeans,
         )
 
-        import os as _os
-        import sys as _sys
-
-        _prof = _os.environ.get("SPARK_GRAFT_BUILD_PROFILE") == "1"
-        _t = [time.time()]
-
-        def _stage(name: str) -> None:
-            if _prof:
-                now = time.time()
-                print(f"build[{name}]: {now - _t[0]:.2f}s", file=_sys.stderr)
-                _t[0] = now
-
         # Rebuild-under-ingest atomicity (VERDICT r10 #1): the snapshot
         # epoch the build covers is captured BEFORE the build input
         # materializes, exactly the fold-window bound refresh_indexes
@@ -1081,7 +1037,6 @@ class VectorCollection:
                 "(empty, all-tombstoned, or all-null) — ingest before building"
             )
         dim = len(first[0])
-        _stage("current+dim")
         # generation-versioned layout (VERDICT r10 #1): every artifact
         # of this build lands in fresh `_g<B>` dirs; nothing the old
         # generation serves from is touched until the single atomic
@@ -1124,7 +1079,6 @@ class VectorCollection:
                 cur_idx, nlist=nlist, vec_col="vector", id_col="id",
                 sample_fraction=sample_fraction, seed=seed, return_np=True,
             )
-        _stage("centroids")
         cb_np = None
         if residual:
             # thread the just-trained driver-side forms through training
@@ -1174,7 +1128,6 @@ class VectorCollection:
             .parquet(f"{self.path}/{stable_sub}")
         )
         n_entries = int(n_obs.get["n"])
-        _stage("encode+write")
         # IVF-PQ centroids get their OWN path: when use_opq=True they live
         # in OPQ-ROTATED space, and sharing {path}/index_centroids with
         # build_ivf_index (original space) would make a later topk_ivf /
@@ -1182,7 +1135,6 @@ class VectorCollection:
         # centroids — a silent systematic space mismatch.
         cents.write.mode("overwrite").parquet(f"{self.path}/{cents_sub}")
         codebooks.write.mode("overwrite").parquet(f"{self.path}/{books_sub}")
-        _stage("artifact-write")
         # filter↔geometry correlation stats for the planner (VERDICT r08
         # #1): per-filter-value centroid histograms, collected while the
         # build snapshot is still persisted (one narrow join + two small
@@ -1222,35 +1174,29 @@ class VectorCollection:
         swap_t = time.time()
 
         def _swap(m: dict) -> None:
-            superseded = [
-                m.get("index_stable_path", "index_stable"),
-                m.get("index_centroids_path", "index_centroids"),
-                m.get("index_codebooks_path", "index_codebooks"),
-                m.get("index_rotation_path", "index_rotation"),
-            ]
-            # the old generation's fold overlays (round 13) are part of
-            # its read view — retire them WITH it so in-flight readers
-            # keep resolving them for the retention window; pending
-            # overlays (a fold racing this swap) retire too — that
-            # fold's advance will see the build_id change and no-op
-            superseded += sorted(
-                {
-                    v
-                    for v in (m.get("index_fold_overrides") or {}).values()
-                    if v
-                }
-                | set((m.get("index_fold_pending") or {}).keys())
+            # time-based multi-generation retention (ADVICE r11 medium):
+            # the superseded generation is timestamped into the history
+            # and _gc_generations("index") removes it only once it has
+            # been superseded for gen_retention_s — so a multi-rung
+            # ladder swapping several times in seconds never deletes a
+            # directory an in-flight reader resolved. The old
+            # generation's fold overlays (round 13) are part of its read
+            # view and retire WITH it; pending overlays (a fold racing
+            # this swap) retire too — that fold's advance will see the
+            # build_id change and no-op. A non-OPQ build drops the
+            # rotation pointer, so the previous rotation retires as well.
+            overlays = set((m.get("index_fold_overrides") or {}).values())
+            overlays |= set(m.get("index_fold_pending") or {})
+            overlays.discard(None)
+            self._retire(
+                m,
+                "index",
+                [m.pop(p, None) for p in _GEN_KINDS["index"].pointers]
+                + sorted(overlays),
+                swap_t,
             )
             m["index_fold_overrides"] = {}
             m["index_fold_pending"] = {}
-            # time-based multi-generation retention (ADVICE r11 medium):
-            # every superseded generation is timestamped into the
-            # history; _gc_index_generations removes a generation only
-            # once it has been superseded for gen_retention_s — so a
-            # multi-rung ladder swapping several times in seconds never
-            # deletes a directory an in-flight reader resolved.
-            hist = list(m.get("index_gen_history", []))
-            hist.append({"paths": superseded, "superseded_at": swap_t})
             m.update(
                 index_epoch=int(build_hi),
                 index_build_id=gen,
@@ -1258,10 +1204,6 @@ class VectorCollection:
                 index_centroids_path=cents_sub,
                 index_codebooks_path=books_sub,
                 **({"index_rotation_path": rot_sub} if use_opq else {}),
-                index_gen_history=hist,
-                # kept for observability/back-compat: the most recently
-                # superseded generation (== hist[-1].paths)
-                index_prev_keep=superseded,
                 index_residual=bool(residual),
                 index_spill=int(spill),
                 index_opq=bool(use_opq),
@@ -1308,7 +1250,7 @@ class VectorCollection:
                 meta_after, crows, cb_np,
                 rot=r_mat if use_opq else None,
             )
-        self._gc_index_generations()
+        self._gc_generations("index")
 
     def _build_indexes_auto(
         self,
@@ -1350,18 +1292,6 @@ class VectorCollection:
             train_centroids_kmeans,
         )
 
-        import os as _os
-        import sys as _sys
-
-        _prof = _os.environ.get("SPARK_GRAFT_BUILD_PROFILE") == "1"
-        _t = [time.time()]
-
-        def _stage(name: str) -> None:
-            if _prof:
-                now = time.time()
-                print(f"auto[{name}]: {now - _t[0]:.2f}s", file=_sys.stderr)
-                _t[0] = now
-
         # one snapshot bound for the WHOLE ladder (rebuild-under-ingest
         # atomicity, VERDICT r10 #1): every rung builds the same epoch
         # window and swaps to index_epoch = build_hi; appends landing
@@ -1392,7 +1322,6 @@ class VectorCollection:
                 "(empty, all-tombstoned, or all-null) — ingest before building"
             )
         dim = len(first[0])
-        _stage("current+dim")
 
         def _div(x: int) -> int:
             # largest divisor of dim that is ≤ x (PQ needs m | dim)
@@ -1448,12 +1377,10 @@ class VectorCollection:
         exact_plan = self.topk(queries, k=k)
         exact_rows = exact_plan.collect()
         exact = self.spark.createDataFrame(exact_rows, exact_plan.schema)
-        _stage("exact-gt")
         cents0, cents0_np = train_centroids_kmeans(
             cur, nlist=nlist, vec_col="vector", id_col="id",
             sample_fraction=sample_fraction, seed=seed, return_np=True,
         )
-        _stage("centroids0")
         history: list[dict] = []
         i = 0
         while i < len(ladder):
@@ -1469,14 +1396,12 @@ class VectorCollection:
                 _build_hi=build_hi,
             )
             t_probe = time.time()
-            _stage(f"rung{i}-build")
             approx = self.topk_two_phase(
                 queries, k=k, nprobe=nprobe, rerank_factor=rerank_factor
             )
             r = float(
                 recall_at_k(approx, exact, k=k).agg(F.avg("recall")).first()[0]
             )
-            _stage(f"rung{i}-probe")
             # per-rung wall times land in the manifest so bench/VERDICT
             # can govern the costliest entry rung by rung instead of as
             # one opaque total (VERDICT r06 #2)
@@ -1642,74 +1567,6 @@ class VectorCollection:
         return f"{self.path}/" + (self._meta() if meta is None else meta).get(
             "index_rotation_path", "index_rotation"
         )
-
-    def _gc_index_generations(self, retention_s: float | None = None) -> None:
-        """Remove superseded stable-index generations once they have
-        been superseded for `retention_s` (ADVICE r11 medium — default
-        `self.gen_retention_s`). The old keep-exactly-one-previous rule
-        broke under the auto-build ladder: it swaps+GCs once per rung
-        within seconds, so a query that resolved its paths two rungs
-        ago read an rmtree'd directory mid-serving. Time-based
-        retention makes GC safe to run on EVERY swap: a generation is
-        deletable only when no reader could still hold its paths (the
-        window any in-flight query spans is one query wall, orders of
-        magnitude under the retention). Expired entries are pruned from
-        the manifest history atomically before their dirs go."""
-        if retention_s is None:
-            retention_s = self.gen_retention_s
-        now = time.time()
-
-        def _trim(m: dict) -> None:
-            if "index_gen_history" not in m:
-                return  # legacy manifest: keep the prev_keep fallback live
-            m["index_gen_history"] = [
-                h
-                for h in m["index_gen_history"]
-                if now - float(h.get("superseded_at", now)) < retention_s
-            ]
-
-        meta = self._meta_mutate(_trim)
-        keep = {
-            meta.get("index_stable_path", "index_stable"),
-            meta.get("index_centroids_path", "index_centroids"),
-            meta.get("index_codebooks_path", "index_codebooks"),
-            meta.get("index_rotation_path", "index_rotation"),
-        }
-        # live fold overlays (round 13): dirs the override map serves
-        # from, plus pending dirs a concurrent fold is mid-writing —
-        # pre-registered under the writer lock precisely so this sweep
-        # (which a rebuild runs WHILE folds continue) can never reap an
-        # overlay between its write and its manifest advance
-        keep |= {
-            v
-            for v in (meta.get("index_fold_overrides") or {}).values()
-            if v
-        }
-        keep |= set((meta.get("index_fold_pending") or {}).keys())
-        for h in meta.get("index_gen_history", []):
-            keep |= set(h.get("paths", []))
-        if "index_gen_history" not in meta:
-            # legacy manifest (pre-history layout): honor its one-build
-            # retention list rather than deleting its previous generation
-            keep |= set(meta.get("index_prev_keep", []))
-        # prefixes cover the versioned layout and its legacy unversioned
-        # twin; index_centroids (plain-IVF) and index_ivf are separate
-        # indexes and are never touched here
-        prefixes = (
-            "index_stable",
-            "index_centroids_stable",
-            "index_codebooks",
-            "index_rotation",
-            "index_fold",
-        )
-        for d in self.fs.list_dirs(self.path):
-            name = d.rstrip("/").rsplit("/", 1)[-1]
-            if name in keep:
-                continue
-            if any(
-                name == p or name.startswith(p + "_g") for p in prefixes
-            ):
-                self.fs.rmtree(d)
 
     @staticmethod
     def _unpersist_entry(entry) -> None:
@@ -2115,12 +1972,6 @@ class VectorCollection:
         # lets needs_rebuild() notice nlist no longer tracking n.
         superseded = [False]
 
-        def _retire(m: dict, dirs: list[str], now: float) -> None:
-            hist = list(m.get("index_gen_history", []))
-            for d in dirs:
-                hist.append({"paths": [d], "superseded_at": now})
-            m["index_gen_history"] = hist
-
         def _advance(m: dict) -> None:
             # generation guard (ADVICE r11 medium): a background
             # rebuild's atomic swap landing mid-fold means this fold
@@ -2143,7 +1994,7 @@ class VectorCollection:
                 if fold_sub in pend:
                     pend.pop(fold_sub)
                     m["index_fold_pending"] = pend
-                    _retire(m, [fold_sub], now)
+                    self._retire(m, "index", [fold_sub], now)
                 return
             # install the overlay: affected lists repoint to this
             # fold's dir (None = the list is now empty); on a
@@ -2161,7 +2012,7 @@ class VectorCollection:
             # overlay dirs no longer referenced by any list retire into
             # the time-based retention history (in-flight readers keep
             # resolving them for gen_retention_s, same as generations)
-            _retire(m, sorted(old_dirs - new_dirs), now)
+            self._retire(m, "index", sorted(old_dirs - new_dirs), now)
             rows_now = int(m.get("index_rows", m.get("index_rows_built", 0)))
             m["index_epoch"] = fold_hi
             m["index_rows"] = max(
@@ -3449,9 +3300,8 @@ class VectorCollection:
             # generation observability (round 11): which dirs serve and
             # which superseded generations are still retained for
             # readers that resolved before a swap (time-based retention
-            # as of round 12 — see _gc_index_generations)
+            # as of round 12 — see _gc_generations)
             "index_path": meta.get("index_stable_path", "index_stable"),
-            "index_prev_keep": meta.get("index_prev_keep", []),
             "index_gen_history": meta.get("index_gen_history", []),
             # the retention contract, surfaced (VERDICT r12 #3): a
             # superseded generation/overlay outlives its swap by this

@@ -4200,7 +4200,7 @@ def mut_gen_retention_reader(spark: SparkSession, sf_dir: str) -> DataFrame:
     old keep-one-previous rule the first-bound generation was rmtree'd
     by the second swap and this exact plan died with FileNotFound
     mid-serving (the auto-ladder swaps this fast in one build call).
-    Time-based retention (_gc_index_generations) keeps every
+    Time-based retention (_gc_generations) keeps every
     generation superseded less than gen_retention_s, so the plan
     collects green — and because the probe covers all lists with a
     corpus-wide rerank budget, the result is the exact top-k the
@@ -4612,7 +4612,7 @@ def mut_snapshot_retention_reader(spark: SparkSession, sf_dir: str) -> DataFrame
     cycles swap the pointer and GC superseded versions — under the old
     keep-only-current rule the bound version was rmtree'd and this plan
     died with FileNotFound; time-based retention
-    (_gc_snapshot_versions, shared gen_retention_s window) keeps it
+    (_gc_generations, shared gen_retention_s window) keeps it
     readable, and the collected rows hash-match the exact pre-compact
     visible set (compaction preserves visibility, so the superseded
     version serves CORRECT data, not just readable files). The plan is

@@ -96,15 +96,16 @@ class LocalStorage:
             if os.path.isdir(os.path.join(root, n))
         )
 
-    def cleanup_dirs(self, root: str, prefix: str, keep: set[str]) -> int:
-        """Remove `root`'s child dirs starting with `prefix` not in
-        `keep` (stale snapshot versions / crashed temp dirs)."""
+    def cleanup_dirs(self, root: str, prefixes: tuple[str, ...], keep: set[str]) -> int:
+        """Remove `root`'s child dirs starting with any of `prefixes`
+        not in `keep` (superseded generations / crashed half-written
+        dirs). Returns the number removed."""
         removed = 0
         if not os.path.isdir(root):
             return 0
         for name in os.listdir(root):
             p = os.path.join(root, name)
-            if name.startswith(prefix) and name not in keep and os.path.isdir(p):
+            if name.startswith(prefixes) and name not in keep and os.path.isdir(p):
                 self.rmtree(p)
                 removed += 1
         return removed
@@ -234,14 +235,14 @@ class HadoopStorage:
             if s.isDirectory()
         )
 
-    def cleanup_dirs(self, root: str, prefix: str, keep: set[str]) -> int:
+    def cleanup_dirs(self, root: str, prefixes: tuple[str, ...], keep: set[str]) -> int:
         removed = 0
         if not self.exists(root):
             return 0
         for status in self._fs.listStatus(self._p(root)):
-            name = status.getPath().getName()
+            name = str(status.getPath().getName())
             if (
-                name.startswith(prefix)
+                name.startswith(prefixes)
                 and name not in keep
                 and status.isDirectory()
             ):
