@@ -41,3 +41,19 @@ def sf_dir() -> str:
 @pytest.fixture(scope="session")
 def sf_oracle_dir() -> str:
     return SF_ORACLE
+
+
+@pytest.fixture(scope="session")
+def open_parquet_reader(spark):
+    """Opens one Parquet file with the JVM parquet-mr reader, to inspect
+    its footer (column chunks, bloom filter offsets) and read its bloom
+    filters. The caller closes the reader."""
+    jvm = spark.sparkContext._jvm
+    conf = spark.sparkContext._jsc.hadoopConfiguration()
+
+    def _open(parquet_file):
+        path = jvm.org.apache.hadoop.fs.Path(parquet_file)
+        infile = jvm.org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(path, conf)
+        return jvm.org.apache.parquet.hadoop.ParquetFileReader.open(infile)
+
+    return _open

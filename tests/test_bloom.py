@@ -1,10 +1,11 @@
-"""Parquet bloom filters on the point-lookup keys (reference
-config.h:120-121: per-segment bloom on id_hash, fpp 0.01).
+"""Parquet bloom filters on the point-lookup key (reference
+config.h:120-121: per-segment id bloom, fpp 0.01).
 
-Verification goes through the JVM parquet-mr reader: the filter must be
-physically present in the snapshot files AND discriminate — ids stored
-in a file hit its bloom, absent ids miss (that miss is exactly the
-row-group skip the scan performs on point lookups).
+Verification goes through the JVM parquet-mr reader: the `id` filter
+must be physically present in the changelog and snapshot files AND
+discriminate — ids stored in a file hit its bloom, absent ids miss
+(that miss is exactly the row-group skip the scan performs on point
+lookups).
 
 Py4J note: membership values must exceed 2^31 so they cross the bridge
 as Java long — a small Python int picks the hash(int) overload, which
@@ -37,23 +38,14 @@ def coll(spark, tmp_path_factory):
     return c
 
 
-def _open_reader(spark, parquet_file):
-    jvm = spark.sparkContext._jvm
-    conf = spark.sparkContext._jsc.hadoopConfiguration()
-    path = jvm.org.apache.hadoop.fs.Path(parquet_file)
-    infile = jvm.org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(path, conf)
-    return jvm.org.apache.parquet.hadoop.ParquetFileReader.open(infile)
-
-
-def test_snapshot_blooms_present_and_discriminating(spark, coll):
-    files = [
-        f for f in coll.fs.walk_files(coll._current_dir()) if f.endswith(".parquet")
-    ]
-    assert files
+def _assert_id_bloom_only(spark, open_parquet_reader, files) -> int:
+    """Every `id` column chunk in `files` carries a bloom that holds the
+    file's ids and discriminates absent ones; no `id_hash` chunk carries
+    one. Returns the number of `id` blooms checked."""
     checked = 0
     for f in files:
         in_file = [r.id for r in spark.read.parquet(f).select("id").collect()]
-        reader = _open_reader(spark, f)
+        reader = open_parquet_reader(f)
         try:
             blocks = reader.getFooter().getBlocks()
             for bi in range(blocks.size()):
@@ -61,21 +53,20 @@ def test_snapshot_blooms_present_and_discriminating(spark, coll):
                 for ci in range(cols.size()):
                     cmeta = cols.get(ci)
                     colname = cmeta.getPath().toDotString()
-                    if colname not in ("id", "id_hash"):
-                        continue
                     if colname == "id_hash":
-                        # the snapshot is sorted by id_hash within files —
-                        # zone maps prune it; the bitset would be dead
-                        # weight, so compact() writes bloom on `id` only
+                        # nothing filters on id_hash by equality (lookups
+                        # are `id IN`), so no writer pays its bitset
                         assert cmeta.getBloomFilterOffset() < 0, (
                             f"unexpected id_hash bloom in {f}"
                         )
+                        continue
+                    if colname != "id":
                         continue
                     # written at all (config.h:120-121)
                     assert cmeta.getBloomFilterOffset() >= 0, (
                         f"no bloom for {colname} in {f}"
                     )
-                    if colname != "id" or not in_file:
+                    if not in_file:
                         continue
                     bloom = reader.readBloomFilter(cmeta)
                     # no false negatives: every id stored in this file hits
@@ -93,10 +84,30 @@ def test_snapshot_blooms_present_and_discriminating(spark, coll):
                     checked += 1
         finally:
             reader.close()
-    assert checked > 0
+    return checked
 
 
-def test_index_files_carry_id_bloom(spark, coll):
+def test_snapshot_blooms_present_and_discriminating(spark, coll, open_parquet_reader):
+    files = [
+        f for f in coll.fs.walk_files(coll._current_dir()) if f.endswith(".parquet")
+    ]
+    assert files
+    assert _assert_id_bloom_only(spark, open_parquet_reader, files) > 0
+
+
+def test_changelog_blooms_id_only(spark, coll, open_parquet_reader):
+    # the fixture compacts but does not vacuum: the changelog files the
+    # ingest wrote are still on disk
+    files = [
+        f
+        for f in coll.fs.walk_files(f"{coll.path}/changelog")
+        if f.endswith(".parquet")
+    ]
+    assert files
+    assert _assert_id_bloom_only(spark, open_parquet_reader, files) > 0
+
+
+def test_index_files_carry_id_bloom(spark, coll, open_parquet_reader):
     coll.build_ivf_index(nlist=4)
     files = [
         f
@@ -106,7 +117,7 @@ def test_index_files_carry_id_bloom(spark, coll):
     assert files
     seen = 0
     for f in files:
-        reader = _open_reader(spark, f)
+        reader = open_parquet_reader(f)
         try:
             blocks = reader.getFooter().getBlocks()
             for bi in range(blocks.size()):

@@ -84,11 +84,41 @@ def test_refresh_equals_full_reencode(spark, coll):
     assert {200, 201, 202, 203, 204} <= got_ids
 
 
-def test_refresh_rewrites_only_affected_lists(spark, coll):
+def _parquet_bytes(*dirs):
+    return sum(
+        os.path.getsize(f)
+        for d in dirs
+        for f in glob.glob(f"{d}/**/*.parquet", recursive=True)
+    )
+
+
+def _assert_no_bloom(open_parquet_reader, files):
+    for f in files:
+        reader = open_parquet_reader(f)
+        try:
+            blocks = reader.getFooter().getBlocks()
+            for bi in range(blocks.size()):
+                cols = blocks.get(bi).getColumns()
+                for ci in range(cols.size()):
+                    assert cols.get(ci).getBloomFilterOffset() < 0, f
+        finally:
+            reader.close()
+
+
+def test_refresh_rewrites_only_affected_lists(spark, coll, open_parquet_reader):
     files_before = {
         f: os.path.getmtime(f)
         for f in glob.glob(f"{coll._stable_index_path()}/centroid_id=*/*.parquet")
     }
+    # the write-amplification ledger counts the build's index bytes:
+    # posting lists, centroids and codebooks, exactly as on disk
+    index_dirs = (
+        coll._stable_index_path(),
+        coll._stable_centroids_path(),
+        coll._codebooks_path(),
+    )
+    bytes_built = coll.write_amplification()["bytes_index"]
+    assert bytes_built == _parquet_bytes(*index_dirs) > 0
     # touch exactly one existing id
     coll.ingest(
         spark.createDataFrame(_ops([0], op="UPSERT", epoch0=50_000), SCHEMA)
@@ -107,7 +137,20 @@ def test_refresh_rewrites_only_affected_lists(spark, coll):
     ov = meta["index_fold_overrides"]
     assert len(ov) == stats["n_lists_rewritten"]
     assert set(ov.values()) == {stats["fold_dir"]}
-    assert os.path.isdir(f"{coll.path}/{stats['fold_dir']}")
+    fold_dir = f"{coll.path}/{stats['fold_dir']}"
+    assert os.path.isdir(fold_dir)
+    # ... and the fold adds exactly its overlay's bytes
+    wa = coll.write_amplification()
+    assert wa["bytes_index"] == bytes_built + _parquet_bytes(fold_dir)
+    assert wa["wa_total"] == round(
+        (wa["bytes_physical"] + wa["bytes_index"]) / wa["bytes_logical"], 4
+    )
+    # no posting-list file carries a bloom bitset: nothing pushes an id
+    # predicate into an index scan (partition pruning on centroid_id and
+    # a broadcast anti-join on id read them)
+    overlay_files = glob.glob(f"{fold_dir}/centroid_id=*/*.parquet")
+    assert files_before and overlay_files
+    _assert_no_bloom(open_parquet_reader, list(files_before) + overlay_files)
 
 
 def test_fold_overlays_consolidate_and_reader_plans_survive(spark, coll):

@@ -218,21 +218,25 @@ class VectorCollection:
     # -- write path ---------------------------------------------------------
 
     @staticmethod
-    def _with_bloom(writer, cols: tuple[str, ...] = ("id", "id_hash")):
-        """Parquet bloom filters on the point-lookup keys (reference
-        config.h:120-121: per-segment bloom on id_hash, fpp 0.01). Bloom
-        covers equality lookups on keys the file is NOT sorted by; a
-        sorted key is already pruned by row-group zone maps, so writers
-        of sorted data pass a narrower `cols` and skip the bitset cost.
-        At 100 TB, set parquet.bloom.filter.expected.ndv per table to
-        right-size the bitsets; the fpp default here keeps row-group
-        skips at 99% for absent keys."""
-        for col in cols:
-            writer = writer.option(f"parquet.bloom.filter.enabled#{col}", "true")
-            writer = writer.option(f"parquet.bloom.filter.fpp#{col}", "0.01")
-        # adaptive sizing: without it every column chunk pays the 1 MiB
-        # default bitset regardless of its actual NDV — 2× compaction cost
-        return writer.option("parquet.bloom.filter.adaptive.enabled", "true")
+    def _with_bloom(writer):
+        """Parquet bloom filter on `id`, the point-lookup key (reference
+        config.h:120-121: per-segment id bloom, fpp 0.01). Only the data
+        segments a lookup scans carry it — the changelog and the
+        snapshot, where `lookup()`'s `id IN` is pushed to the reader. No
+        `id_hash` bloom: nothing filters on it by equality. No bloom on
+        the IVF-PQ base or fold overlays: they are read by centroid_id
+        partition pruning and a broadcast anti-join on id, neither of
+        which consults a bitset.
+        Adaptive sizing does not right-size small chunks: it only keeps
+        a chunk under the 1 MiB default, and its smallest candidate is
+        64 KiB, so a bloomed id chunk is ~65.5 KB at 256 and at 1,024
+        rows alike. At 100 TB, set parquet.bloom.filter.expected.ndv per
+        table to size the bitsets."""
+        return (
+            writer.option("parquet.bloom.filter.enabled#id", "true")
+            .option("parquet.bloom.filter.fpp#id", "0.01")
+            .option("parquet.bloom.filter.adaptive.enabled", "true")
+        )
 
     def _dir_bytes(self, subdir: str) -> int:
         # sizes ride along with the recursive listing (scandir /
@@ -704,15 +708,11 @@ class VectorCollection:
         # executor memory and the added pressure made compact near-linear
         # again (e = 0.82). Point lookups are served shuffle-free by the
         # within-file sort (row-group zone maps) plus parquet bloom on
-        # id/id_hash, and ANALYZE instead re-reads the just-written
-        # parquet with column pruning — tenant/namespace/tags only, never
-        # the vectors.
-        # bloom on `id` only: the snapshot is sorted by id_hash within
-        # files, so row-group zone maps already prune id_hash equality —
-        # writing its bitset too was pure compaction cost (VERDICT r04 #4)
-        self._with_bloom(
-            base.sortWithinPartitions("id_hash").write, cols=("id",)
-        ).mode("overwrite").parquet(new_dir)
+        # id, and ANALYZE instead re-reads the just-written parquet with
+        # column pruning — tenant/namespace/tags only, never the vectors.
+        self._with_bloom(base.sortWithinPartitions("id_hash").write).mode(
+            "overwrite"
+        ).parquet(new_dir)
         self.fs.write_text_atomic(
             f"{new_dir}/_SNAPSHOT_META.json",
             json.dumps({"snapshot_epoch": int(max_epoch)}),
@@ -1115,15 +1115,15 @@ class VectorCollection:
         # job per build/rung).
         from pyspark.sql import Observation
 
+        # No bloom options (see _with_bloom): nothing pushes an id
+        # predicate into a posting-list scan, and every list file would
+        # carry a 64 KiB bitset for a few KB of codes.
         n_obs = Observation()
         (
-            self._with_bloom(
-                encoded.select("id", "centroid_id", "codes")
-                .observe(n_obs, F.count(F.lit(1)).alias("n"))
-                .repartition("centroid_id")
-                .write
-            )
-            .mode("overwrite")
+            encoded.select("id", "centroid_id", "codes")
+            .observe(n_obs, F.count(F.lit(1)).alias("n"))
+            .repartition("centroid_id")
+            .write.mode("overwrite")
             .partitionBy("centroid_id")
             .parquet(f"{self.path}/{stable_sub}")
         )
@@ -1172,8 +1172,16 @@ class VectorCollection:
         # this swap can interleave between its read and its write
         # (ADVICE r11 medium).
         swap_t = time.time()
+        # index bytes this build wrote, for the write-amplification
+        # ledger (listed before the lock, like the changelog's count)
+        index_bytes = sum(
+            self._dir_bytes(sub)
+            for sub in (stable_sub, cents_sub, books_sub)
+            + ((rot_sub,) if use_opq else ())
+        )
 
         def _swap(m: dict) -> None:
+            m["bytes_index"] = m.get("bytes_index", 0) + index_bytes
             # time-based multi-generation retention (ADVICE r11 medium):
             # the superseded generation is timestamped into the history
             # and _gc_generations("index") removes it only once it has
@@ -1916,9 +1924,10 @@ class VectorCollection:
         # (see _reserve_fold_dir), so a rebuild's concurrent GC sweep
         # cannot reap it between this write and the manifest advance.
         fold_sub = self._reserve_fold_dir()
+        # no bloom options, like the base generation's write
         (
-            self._with_bloom(out.repartition("centroid_id").write)
-            .mode("overwrite")
+            out.repartition("centroid_id")
+            .write.mode("overwrite")
             .partitionBy("centroid_id")
             .parquet(f"{self.path}/{fold_sub}")
         )
@@ -1971,8 +1980,11 @@ class VectorCollection:
         # maintain freshness but never re-size, so the odometer is what
         # lets needs_rebuild() notice nlist no longer tracking n.
         superseded = [False]
+        fold_bytes = self._dir_bytes(fold_sub)
 
         def _advance(m: dict) -> None:
+            # the overlay's bytes were written whether or not it lands
+            m["bytes_index"] = m.get("bytes_index", 0) + fold_bytes
             # generation guard (ADVICE r11 medium): a background
             # rebuild's atomic swap landing mid-fold means this fold
             # rewrote the now-SUPERSEDED generation — its window is
@@ -2139,10 +2151,14 @@ class VectorCollection:
         p95 ≤ 2.6, types.h:144-145). Logical bytes = changelog appends
         (one durable write of user data, dedup already applied); physical
         bytes add every snapshot rewrite by compact(). One WA sample is
-        recorded per compaction; p50/p95 summarize the history."""
+        recorded per compaction; p50/p95 summarize the history.
+        `bytes_index` counts the IVF-PQ build generations (posting
+        lists, centroids, codebooks, rotation) and fold overlays;
+        `wa_total` is the whole figure, (physical + index) / logical."""
         meta = self._meta()
         logical = meta.get("bytes_logical", 0)
         physical = meta.get("bytes_physical", 0)
+        index = meta.get("bytes_index", 0)
         history = meta.get("wa_history", [])
 
         def pctl(xs, q):
@@ -2153,6 +2169,8 @@ class VectorCollection:
             "bytes_logical": logical,
             "bytes_physical": physical,
             "wa_now": round(physical / logical, 4) if logical else None,
+            "bytes_index": index,
+            "wa_total": round((physical + index) / logical, 4) if logical else None,
             "wa_p50": pctl(history, 0.5) if history else None,
             "wa_p95": pctl(history, 0.95) if history else None,
             "n_compactions": len(history),

@@ -3599,7 +3599,7 @@ def mut_compaction_trigger_report(spark: SparkSession, sf_dir: str) -> DataFrame
     "mut_bloom_pruned_lookup",
     # Q10 witnessed under the driver gate: point lookups served through
     # the REAL compacted snapshot — the parquet files carrying the
-    # bloom filters on id/id_hash and the within-file id_hash sort
+    # bloom filter on id and the within-file id_hash sort
     # (zone maps). The looked-up rows must equal the pure-SQL visible
     # state at those ids; a present id missed by the bloom/zone path or
     # a tombstoned id leaking through diverges the hash.
