@@ -7,6 +7,7 @@ from __future__ import annotations
 
 import glob
 import os
+import uuid
 
 import pytest
 from pyspark.sql import functions as F
@@ -44,14 +45,45 @@ def coll(spark, tmp_path):
     return c
 
 
-def _index_rows(spark, path):
-    # the merged stable view (round 13): base generation + fold
-    # overlays, resolved through the manifest pointers
-    c = VectorCollection(spark, path, metric="ip")
-    df = c.stable_index_df()
+def _rows(df):
     return {
         (r.id, int(r.centroid_id), tuple(r.codes)) for r in df.collect()
     }
+
+
+def _index_rows(spark, path):
+    # the merged stable view (round 13): base generation + fold
+    # overlays, resolved through the manifest pointers
+    return _rows(VectorCollection(spark, path, metric="ip").stable_index_df())
+
+
+def _jobs(spark, fn) -> int:
+    """Spark jobs `fn` runs, counted through a job group."""
+    sc = spark.sparkContext
+    group = f"jobs-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "job count")
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def _assert_views_live(c):
+    """Every read view the handle caches is a dir on disk that the
+    manifest (or _CURRENT) still names."""
+    meta = c._meta()
+    named = {
+        meta.get("index_stable_path"),
+        meta.get("index_centroids_path"),
+        meta.get("index_codebooks_path"),
+        c._current_dir().rsplit("/", 1)[-1],
+        *(meta.get("index_fold_overrides") or {}).values(),
+    }
+    views = set(c._artifact_cache.get("views", {}))
+    assert views and views <= named
+    assert all(os.path.isdir(os.path.join(c.path, d)) for d in views)
 
 
 def test_refresh_equals_full_reencode(spark, coll):
@@ -194,6 +226,13 @@ def test_fold_overlays_consolidate_and_reader_plans_survive(spark, coll):
     assert consolidations >= 1, "fan-in cap never forced a consolidation"
     # (a) the prebound plan still reads (overlays retained, base intact)
     assert len(plan.collect()) == 5
+    # (d) warm read views: on an unchanged manifest the merged stable
+    # view runs no Spark job (no listing, no schema inference) and
+    # current() runs only the mutable changelog's fresh read
+    coll.stable_index_df()
+    coll.current()
+    warm = _jobs(spark, lambda: (coll.stable_index_df(), coll.current()))
+    assert warm == _jobs(spark, coll.changelog)
     # (c) merged view == full re-encode with the same artifacts
     cents = spark.read.parquet(coll._stable_centroids_path())
     cbs = spark.read.parquet(coll._codebooks_path())
@@ -205,6 +244,8 @@ def test_fold_overlays_consolidate_and_reader_plans_survive(spark, coll):
         ).collect()
     }
     assert _index_rows(spark, coll.path) == want
+    # the same handle's cached views serve the same merged view
+    assert _rows(coll.stable_index_df()) == want
     # retired overlays age out with the generation retention window;
     # live overlays and the base generation survive the sweep
     coll._gc_generations("index", retention_s=0.0)
@@ -215,6 +256,7 @@ def test_fold_overlays_consolidate_and_reader_plans_survive(spark, coll):
         d for d in os.listdir(coll.path) if d.startswith("index_fold")
     }
     assert on_disk == live_dirs
+    _assert_views_live(coll)
     assert _index_rows(spark, coll.path) == want
     # a full rebuild resets the overlay map and retires its dirs
     coll.build_indexes(nlist=8, m=4, nbits=4)
@@ -223,6 +265,10 @@ def test_fold_overlays_consolidate_and_reader_plans_survive(spark, coll):
     assert not any(
         d.startswith("index_fold") for d in os.listdir(coll.path)
     )
+    assert _rows(coll.stable_index_df()) == _index_rows(spark, coll.path)
+    coll.current()
+    _assert_views_live(coll)
+    assert coll._meta()["index_stable_path"] in coll._artifact_cache["views"]
 
 
 def test_concurrent_fold_stale_guard(spark, coll):

@@ -150,6 +150,20 @@ def test_collection_time_travel(spark, tmp_path_factory, sf_dir):
         .withColumn("epoch", F.col("epoch") + 10**6)
     )
     head_identity()
+    # the handle's cached snapshot view must follow the _CURRENT swap:
+    # after a second compact, current() reads the new current_v* dir
+    # only, and the retired dir's view is evicted
+    old_snap = c._current_dir().rsplit("/", 1)[-1]
+    before = {tuple(r) for r in c.current().select("id", "epoch").collect()}
+    c.compact()
+    new_snap = c._current_dir().rsplit("/", 1)[-1]
+    assert new_snap.startswith("current_v") and new_snap != old_snap
+    snap_files = {
+        f.split("/")[-2] for f in c.current().inputFiles() if "/current_v" in f
+    }
+    assert snap_files == {new_snap}
+    assert old_snap not in c._artifact_cache["views"]
+    assert {tuple(r) for r in c.current().select("id", "epoch").collect()} == before
 
 
 def test_time_travel_at_head_equals_visible(spark, sf_dir):

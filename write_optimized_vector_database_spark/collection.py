@@ -91,6 +91,20 @@ class _GenKind(NamedTuple):
     prefixes: tuple[str, ...]  # dir-name prefixes the kind's sweep owns
 
 
+class _VisibleRef(NamedTuple):
+    """The visible view's inputs, resolved ONCE per call: the live
+    snapshot dir name and the epoch its marker records come from one
+    `_CURRENT` read and one marker read (-1 / None before the first
+    compact), and the changelog from one walk (None when it holds no
+    Parquet file). Every branch of a call builds on the same ref, so a
+    compact() swap landing mid-call can never pair the new snapshot
+    with the old epoch's tail filter."""
+
+    snap: str | None
+    snap_epoch: int
+    log: DataFrame | None
+
+
 # The four generation-versioned artifacts. Each swap retires what it
 # superseded into the kind's history as {"paths", "superseded_at"}; GC
 # keeps the live dirs plus every entry younger than gen_retention_s and
@@ -212,6 +226,8 @@ class VectorCollection:
         # consistent when query threads race the maintenance worker
         # (unpersist on an in-use frame is safe — Spark recomputes —
         # so only the cache dict itself needs guarding).
+        # The same cache holds the read views of immutable generation
+        # dirs under "views" (dir name → DataFrame, see _read_dir).
         self._artifact_cache: dict = {}
         self._artifact_cache_lock = threading.Lock()
 
@@ -398,12 +414,61 @@ class VectorCollection:
         for h in meta.get(spec.history, []):
             keep |= set(h.get("paths", ()))
         keep.discard(None)
-        return self.fs.cleanup_dirs(self.path, spec.prefixes, keep=keep)
+        removed = self.fs.cleanup_dirs(self.path, spec.prefixes, keep=keep)
+        # a retired dir's cached view must not outlive its files
+        self._prune_read_views()
+        return removed
 
     def _meta(self) -> dict:
         if self.fs.exists(self._meta_path):
             return json.loads(self.fs.read_text(self._meta_path))
         return {}
+
+    # -- read views ---------------------------------------------------------
+
+    def _read_dir(self, sub: str) -> DataFrame:
+        """Read view of the generation dir `sub`, built once per handle.
+
+        The DataFrame `spark.read.parquet` returns carries Spark's
+        resolved file index and schema, so serving later calls from it
+        skips the listing job (a distributed one past 32 partition
+        dirs) and the schema-inference job a fresh read runs every
+        time. Keyed by the dir name alone, which is sound because every
+        dir served here is written once, before a manifest pointer (or
+        `_CURRENT`) names it, and never rewritten: index, IVF, tag-dict
+        and overlay names come from the locked counters (_reserve_gen,
+        _reserve_fold_dir), snapshots are `current_v<ms>`. The mutable
+        changelog never goes through here.
+
+        Inserting an entry drops every cached view the newest manifest
+        no longer names (_prune_read_views); a caller still holding an
+        evicted view keeps reading it, because generation retention
+        keeps its files."""
+        with self._artifact_cache_lock:
+            hit = self._artifact_cache.get("views", {}).get(sub)
+        if hit is not None:
+            return hit
+        df = self.spark.read.parquet(f"{self.path}/{sub}")
+        with self._artifact_cache_lock:
+            views = self._artifact_cache.setdefault("views", {})
+            df = views.setdefault(sub, df)
+        self._prune_read_views()
+        return df
+
+    def _prune_read_views(self) -> None:
+        """Drop the cached views of dirs that neither the newest
+        manifest's generation pointers and live fold overlays nor the
+        `_CURRENT` target name."""
+        meta = self._meta()
+        live = {meta.get(p) for kind in _GEN_KINDS.values() for p in kind.pointers}
+        live |= set((meta.get("index_fold_overrides") or {}).values())
+        cur = self._current_dir()
+        if cur:
+            live.add(cur.rsplit("/", 1)[-1])
+        with self._artifact_cache_lock:
+            views = self._artifact_cache.get("views", {})
+            for sub in [s for s in views if s not in live]:
+                del views[sub]
 
     def tag_dict(self, meta: dict | None = None) -> DataFrame | None:
         """The collection's string→id tag dictionary (config.h:122-123),
@@ -414,7 +479,7 @@ class VectorCollection:
         sub = meta.get("tag_dict_path")
         if not sub or not self.fs.isdir(f"{self.path}/{sub}"):
             return None
-        return self.spark.read.parquet(f"{self.path}/{sub}")
+        return self._read_dir(sub)
 
     def _encode_string_tags(self, batch: DataFrame) -> DataFrame:
         """String-tag ingest edge: extend the persisted dictionary with
@@ -533,10 +598,13 @@ class VectorCollection:
         reference's tombstone→compaction flow, config.h:54-61). Returns
         the number of ids tombstoned."""
         pred = F.expr(predicate) if isinstance(predicate, str) else predicate
-        victims = self.current().filter(pred).select("id", "tenant", "namespace")
-        hi = self._snapshot_epoch()
-        if self._has_changelog_files():
-            tail_hi = self.changelog().agg(F.max("epoch")).first()[0]
+        vis = self._visible_ref()
+        victims = (
+            self._current_view(vis).filter(pred).select("id", "tenant", "namespace")
+        )
+        hi = vis.snap_epoch
+        if vis.log is not None:
+            tail_hi = vis.log.agg(F.max("epoch")).first()[0]
             hi = max(hi, tail_hi if tail_hi is not None else -1)
         base = max(hi, 0) + 1
         from pyspark.sql import Window
@@ -574,17 +642,35 @@ class VectorCollection:
             return None
         return f"{self.path}/{self.fs.read_text(ptr).strip()}"
 
-    def _snapshot_epoch(self) -> int:
-        """The snapshot's high-water epoch, read from the marker INSIDE
-        the snapshot dir — it becomes visible atomically with the pointer
-        swap, so a crash can never leave epoch and data disagreeing."""
+    def _snapshot_ref(self) -> tuple[str | None, int]:
+        """(live snapshot dir name, its high-water epoch) from ONE read
+        of the `_CURRENT` pointer and one of the marker INSIDE the dir
+        it names. The marker becomes visible atomically with the pointer
+        swap, so a crash can never leave epoch and data disagreeing, and
+        reading both once keeps the pair consistent across a concurrent
+        compact() swap."""
         d = self._current_dir()
         if d is None:
-            return -1
+            return None, -1
         marker = f"{d}/_SNAPSHOT_META.json"
-        if self.fs.exists(marker):
-            return json.loads(self.fs.read_text(marker)).get("snapshot_epoch", -1)
-        return -1
+        epoch = (
+            json.loads(self.fs.read_text(marker)).get("snapshot_epoch", -1)
+            if self.fs.exists(marker)
+            else -1
+        )
+        return d.rsplit("/", 1)[-1], epoch
+
+    def _snapshot_epoch(self) -> int:
+        """The snapshot's high-water epoch (see _snapshot_ref)."""
+        return self._snapshot_ref()[1]
+
+    def _visible_ref(self) -> _VisibleRef:
+        """Resolve the visible view's inputs once for one call: the
+        snapshot pointer and marker (_snapshot_ref) and one changelog
+        walk. The changelog is mutable, so it is a fresh read."""
+        snap, snap_epoch = self._snapshot_ref()
+        log = self.changelog() if self._has_changelog_files() else None
+        return _VisibleRef(snap, snap_epoch, log)
 
     def current(self) -> DataFrame:
         """Read-your-writes visible view: compacted snapshot ∪ changelog
@@ -597,25 +683,29 @@ class VectorCollection:
         window over the snapshot would block pushdown and cost a full
         shuffle of the table at every read. Tail epochs are strictly
         greater than snapshot epochs, so tail-latest always wins."""
-        snap_epoch = self._snapshot_epoch()
-        if snap_epoch >= 0:
-            return self._snapshot_tail_view(snap_epoch)
-        if not self._has_changelog_files():
+        return self._current_view(self._visible_ref())
+
+    def _current_view(self, ref: _VisibleRef) -> DataFrame:
+        """current() over an already-resolved ref."""
+        if ref.snap_epoch >= 0:
+            return self._snapshot_tail_view(ref)
+        if ref.log is None:
             raise ValueError(f"collection at {self.path} is empty")
-        return C.visible(self.changelog())
+        return C.visible(ref.log)
 
     def _snapshot_tail_view(
-        self, snap_epoch: int, as_of_epoch: int | None = None
+        self, ref: _VisibleRef, as_of_epoch: int | None = None
     ) -> DataFrame:
         """The snapshot ∪ tail merge shared by current() (no upper
-        bound) and visible_as_of() (tail truncated at `as_of_epoch`)."""
-        snapshot = self.spark.read.parquet(self._current_dir())
-        if not self._has_changelog_files():
+        bound) and visible_as_of() (tail truncated at `as_of_epoch`).
+        The snapshot comes from its cached read view (_read_dir)."""
+        snapshot = self._read_dir(ref.snap)
+        if ref.log is None:
             return snapshot
-        in_tail = F.col("epoch") > snap_epoch
+        in_tail = F.col("epoch") > ref.snap_epoch
         if as_of_epoch is not None:
             in_tail = in_tail & (F.col("epoch") <= as_of_epoch)
-        tail = self.changelog().filter(in_tail)
+        tail = ref.log.filter(in_tail)
         tail_latest = C.latest_by_id(tail)
         # the anti-join needs only the tail's id SET (fences excluded,
         # same as latest_by_id's up-front drop — a FENCE can share a
@@ -656,16 +746,16 @@ class VectorCollection:
         boundary, not every intermediate op — the same collapse the
         reference's message-buffer dedup applies (msg-buf.h:134-147).
         """
-        snap_epoch = self._snapshot_epoch()
-        if as_of_epoch >= snap_epoch >= 0:
-            return self._snapshot_tail_view(snap_epoch, as_of_epoch)
+        ref = self._visible_ref()
+        if as_of_epoch >= ref.snap_epoch >= 0:
+            return self._snapshot_tail_view(ref, as_of_epoch)
         vacuum_epoch = int(self._meta().get("vacuum_epoch", -1))
-        if not self._has_changelog_files() or as_of_epoch < vacuum_epoch:
+        if ref.log is None or as_of_epoch < vacuum_epoch:
             raise ValueError(
                 f"as_of_epoch={as_of_epoch} predates retained history "
-                f"(snapshot epoch {snap_epoch}, vacuum watermark {vacuum_epoch})"
+                f"(snapshot epoch {ref.snap_epoch}, vacuum watermark {vacuum_epoch})"
             )
-        return C.visible_as_of(self.changelog(), as_of_epoch)
+        return C.visible_as_of(ref.log, as_of_epoch)
 
     def compact(self) -> None:
         """Fold the changelog into a fresh snapshot, sorted by id_hash
@@ -682,21 +772,16 @@ class VectorCollection:
         A kill at any point leaves either the old snapshot fully live or
         the new one fully live — never a missing dir or an epoch that
         disagrees with the data (the r1 rmtree+rename gap)."""
-        if not self._has_changelog_files():
+        ref = self._visible_ref()
+        if ref.log is None:
             return  # nothing new since the snapshot (e.g. post-vacuum)
-        log = self.changelog()
-        max_epoch = log.agg(F.max("epoch")).collect()[0][0]
-        # superseded-version bookkeeping (round 12): resolve the OLD
-        # pointer before the swap so the version it names can be
-        # retained for in-flight readers, exactly like index
-        # generations (ADVICE r11 medium applied symmetrically)
-        prev_ptr = f"{self.path}/_CURRENT"
-        prev_ver = (
-            self.fs.read_text(prev_ptr).strip()
-            if self.fs.exists(prev_ptr)
-            else None
-        )
-        base = self.current()  # snapshot anti-join tail merge (no snapshot re-window)
+        max_epoch = ref.log.agg(F.max("epoch")).collect()[0][0]
+        # superseded-version bookkeeping (round 12): the OLD pointer,
+        # resolved before the swap, names the version retained for
+        # in-flight readers, exactly like index generations (ADVICE r11
+        # medium applied symmetrically)
+        prev_ver = ref.snap
+        base = self._current_view(ref)  # snapshot anti-join tail merge (no snapshot re-window)
         ver = f"current_v{int(time.time() * 1000)}"
         new_dir = f"{self.path}/{ver}"
         # sortWithinPartitions WITHOUT a range exchange, and NO persist of
@@ -749,7 +834,7 @@ class VectorCollection:
         # refresh planner stats off the snapshot just written — the CBO
         # analogue of ANALYZE TABLE after a rewrite (column-pruned
         # re-read: the vector column never loads)
-        self.analyze(self.spark.read.parquet(new_dir))
+        self.analyze(self._read_dir(ver))
         # GC superseded snapshot versions past retention, plus crashed
         # half-written ones (never pointed to, so never in the history)
         self._gc_generations("snapshot")
@@ -898,16 +983,19 @@ class VectorCollection:
         self._meta_mutate(_swap)
         self._gc_generations("ivf")
 
+    def _ivf_views(self, meta: dict) -> tuple[DataFrame, DataFrame]:
+        """(posting lists, centroids) read views of the live plain-IVF
+        generation named by `meta` (see _read_dir)."""
+        return (
+            self._read_dir(meta.get("ivf_index_path", "index_ivf")),
+            self._read_dir(meta.get("ivf_centroids_path", "index_centroids")),
+        )
+
     def _ivf_index_path(self, meta: dict | None = None) -> str:
         """Live plain-IVF index dir via the manifest pointer (round 12);
         legacy collections fall back to the unversioned dir."""
         return f"{self.path}/" + (self._meta() if meta is None else meta).get(
             "ivf_index_path", "index_ivf"
-        )
-
-    def _ivf_centroids_path(self, meta: dict | None = None) -> str:
-        return f"{self.path}/" + (self._meta() if meta is None else meta).get(
-            "ivf_centroids_path", "index_centroids"
         )
 
     def build_indexes(
@@ -1539,10 +1627,16 @@ class VectorCollection:
         filter pushes into every branch, composing with the per-branch
         in/not-in list masks, so partition pruning and bloom pushdown
         survive unchanged (Catalyst turns long literal lists into
-        hash-set InSet predicates)."""
+        hash-set InSet predicates).
+
+        Every branch comes from the handle's read view of its dir
+        (_read_dir): the base generation is listed once per build and
+        each overlay once per fold, so on an unchanged manifest this
+        call runs no listing and no schema job — only the cheap
+        mask/union plan is rebuilt."""
         if meta is None:
             meta = self._meta()
-        base = self.spark.read.parquet(self._stable_index_path(meta))
+        base = self._read_dir(self._stable_index_subdir(meta))
         ov: dict = meta.get("index_fold_overrides") or {}
         if not ov:
             return base
@@ -1557,7 +1651,7 @@ class VectorCollection:
                 by_dir.setdefault(sub, []).append(int(cid))
         for sub in sorted(by_dir):
             parts.append(
-                self.spark.read.parquet(f"{self.path}/{sub}")
+                self._read_dir(sub)
                 .filter(F.col("centroid_id").isin(by_dir[sub]))
                 .select(*cols)
             )
@@ -1587,9 +1681,12 @@ class VectorCollection:
                 pass
 
     def _evict_index_artifacts(self) -> None:
+        """Drop every cached artifact and read view, so the next call
+        reads cold."""
         with self._artifact_cache_lock:
             hit = self._artifact_cache.pop("idx", None)
             self._artifact_cache.pop("idx_np", None)
+            self._artifact_cache.pop("views", None)
         self._unpersist_entry(hit)
 
     def _np_cache_key(self, meta: dict) -> tuple:
@@ -1777,7 +1874,8 @@ class VectorCollection:
                 "changelog vacuumed past the index epoch — deletes are no "
                 "longer derivable incrementally; run build_indexes()"
             )
-        if not self._has_changelog_files():
+        vis = self._visible_ref()
+        if vis.log is None:
             # fully vacuumed, nothing ingested since: an empty changelog
             # dir would fail parquet schema inference below — this is
             # simply "no delta" (found by the vacuum-during-rebuild gate)
@@ -1793,12 +1891,12 @@ class VectorCollection:
         # generations. Bounding the whole fold to epoch <= fold_hi
         # leaves mid-fold arrivals in the delta for the next refresh;
         # epoch monotonicity is already the engine's MVCC contract.
-        fold_hi = self.changelog().agg(F.max("epoch")).collect()[0][0]
+        fold_hi = vis.log.agg(F.max("epoch")).collect()[0][0]
         if fold_hi is None or int(fold_hi) <= idx_epoch:
             return {"n_touched": 0, "n_reencoded": 0, "n_lists_rewritten": 0}
         fold_hi = int(fold_hi)
         in_window = (F.col("epoch") > idx_epoch) & (F.col("epoch") <= fold_hi)
-        tail = self.changelog().filter(in_window)
+        tail = vis.log.filter(in_window)
         # fences excluded (round 13 correctness fix): a FENCE may share a
         # data id (wal-record.fbs:6 barriers interleave with data); with
         # it counted as "touched", the fold would evict that id's index
@@ -1812,8 +1910,12 @@ class VectorCollection:
             touched.unpersist()
             return {"n_touched": 0, "n_reencoded": 0, "n_lists_rewritten": 0}
 
-        cents = spark.read.parquet(self._stable_centroids_path(fold_meta))
-        codebooks = spark.read.parquet(self._codebooks_path(fold_meta))
+        cents = self._read_dir(
+            fold_meta.get("index_centroids_path", "index_centroids")
+        )
+        codebooks = self._read_dir(
+            fold_meta.get("index_codebooks_path", "index_codebooks")
+        )
         # visible versions of touched ids (deleted ids simply absent);
         # versions newer than fold_hi stay in the delta generation.
         # Specialized window view (round 13, same argument as the
@@ -1826,10 +1928,10 @@ class VectorCollection:
         # the in-window ops of its id; under a concurrent append past
         # fold_hi both shapes leave the id's newer version to the delta
         # branch and the rerank resolves candidates on current()).
-        if idx_epoch >= self._snapshot_epoch():
+        if idx_epoch >= vis.snap_epoch:
             delta_vis = C.visible(tail).filter(F.col("vector").isNotNull())
         else:
-            delta_vis = self.current().filter(
+            delta_vis = self._current_view(vis).filter(
                 in_window & F.col("vector").isNotNull()
             )
         if fold_meta.get("index_residual", False):
@@ -2066,8 +2168,7 @@ class VectorCollection:
         )
 
         meta = self._meta()
-        index = self.spark.read.parquet(self._ivf_index_path(meta))
-        cents = self.spark.read.parquet(self._ivf_centroids_path(meta))
+        index, cents = self._ivf_views(meta)
         exact = self.topk(sample_queries, k=k)
         nprobe, recall = _calibrate(
             index, cents, sample_queries, exact, k=k,
@@ -2267,9 +2368,11 @@ class VectorCollection:
         # one visible-view resolution and one tag-dict resolution for the
         # whole query (ADVICE r12 low): the pre-filter semi-join, the
         # delta branch, and the exact rerank all read THIS view, so the
-        # _CURRENT pointer and the tag dictionary are bound exactly once
-        # per query — the same discipline as the manifest snapshot above
-        cur_view = self.current()
+        # _CURRENT pointer, the snapshot marker, the changelog walk and
+        # the tag dictionary are bound exactly once per query — the same
+        # discipline as the manifest snapshot above
+        vis = self._visible_ref()
+        cur_view = self._current_view(vis)
         q_tag_dict = self._tag_dict_for(tags_any, meta)
         # probe-support prune set, threaded to the ADC call so the cached
         # driver-side centroid rows can honor the same filter
@@ -2466,12 +2569,9 @@ class VectorCollection:
         # latest op (same epoch/op-desc tie-break on the retained rows);
         # ids whose latest ≤ idx_epoch are excluded by the filter either
         # way, and snapshot-side rows are excluded by the epoch bound.
-        snap_epoch = self._snapshot_epoch()
-        if idx_epoch >= snap_epoch:
-            if self._has_changelog_files():
-                post_tail = self.changelog().filter(
-                    F.col("epoch") > idx_epoch
-                )
+        if idx_epoch >= vis.snap_epoch:
+            if vis.log is not None:
+                post_tail = vis.log.filter(F.col("epoch") > idx_epoch)
                 delta_base = C.visible(post_tail)
                 cols = [
                     c for c in cur_view.columns if c in delta_base.columns
@@ -2551,8 +2651,7 @@ class VectorCollection:
         if nprobe is None:
             # certified plain-IVF knob
             nprobe = self._default_nprobe(family="ivf", meta=meta)
-        index = self.spark.read.parquet(self._ivf_index_path(meta))
-        cents = self.spark.read.parquet(self._ivf_centroids_path(meta))
+        index, cents = self._ivf_views(meta)
         allowed = None
         if any(x is not None for x in (tenant, namespace, tags_any, sample_p)):
             allowed = apply_query_filters(
@@ -2590,10 +2689,9 @@ class VectorCollection:
         (exploded), which is exactly the union-bound numerator a
         tags_any OR-filter needs."""
         top_k = top_k or self._STATS_TOP_K
-        base = (
-            df if df is not None else self.spark.read.parquet(self._current_dir())
-        )
-        stats: dict = {"epoch": int(self._snapshot_epoch())}
+        snap, snap_epoch = self._snapshot_ref()
+        base = df if df is not None else self._read_dir(snap)
+        stats: dict = {"epoch": int(snap_epoch)}
 
         # ONE scan for everything: stack every histogram dimension (and a
         # synthetic row-count dimension) into (dim, key) rows, group once,
@@ -3221,8 +3319,7 @@ class VectorCollection:
         meta = self._meta()
         if nprobe is None:
             nprobe = self._default_nprobe(family="ivf", meta=meta)
-        index = self.spark.read.parquet(self._ivf_index_path(meta))
-        cents = self.spark.read.parquet(self._ivf_centroids_path(meta))
+        index, cents = self._ivf_views(meta)
         over = ivf_topk(
             index, queries, cents, k=fetch, nprobe=nprobe, metric=self.metric,
             vec_id_col="id", vec_col="vector",
@@ -3244,16 +3341,16 @@ class VectorCollection:
         (reference target: unmerged delta ≤ 5%, types.h:143). The number
         that tells a scheduler compact() is due — counting is footer-stat
         cheap (count(*) over parquet reads no data pages)."""
-        snap_epoch = self._snapshot_epoch()
+        vis = self._visible_ref()
         tail_n = 0
-        if self._has_changelog_files():
-            tail = self.changelog()
-            if snap_epoch >= 0:
-                tail = tail.filter(F.col("epoch") > snap_epoch)
+        if vis.log is not None:
+            tail = vis.log
+            if vis.snap_epoch >= 0:
+                tail = tail.filter(F.col("epoch") > vis.snap_epoch)
             tail_n = tail.count()
         snap_n = 0
-        if snap_epoch >= 0:
-            snap_n = self.spark.read.parquet(self._current_dir()).count()
+        if vis.snap_epoch >= 0:
+            snap_n = self._read_dir(vis.snap).count()
         total = tail_n + snap_n
         return tail_n / total if total else 0.0
 

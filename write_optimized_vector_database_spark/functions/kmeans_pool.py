@@ -25,8 +25,9 @@ Pool discipline:
   (unguarded caller scripts re-ran themselves 8×); the bespoke protocol
   cannot, and skips the package/pyspark import a spawn worker would pay.
 - lazily created, persistent for the process, bounded by
-  SPARK_GRAFT_TRAIN_PROCS (default min(8, cpu_count/2) — parameterized,
-  not tuned to local[32]; 0/1 disables).
+  SPARK_GRAFT_TRAIN_PROCS (default min(8, usable_cpus/2), sized from
+  the same SPARK_GRAFT_CPUS-or-affinity count as local[N]; 0/1
+  disables). Workers run single-threaded BLAS.
 - small jobs stay sequential (`_POOL_MIN_CELLS`): the pool only pays
   when the training matmul volume does.
 - any pool failure falls back to the sequential loop (same results).
@@ -154,6 +155,13 @@ _POOL_MIN_CELLS = 16_000_000
 _TASK_FNS = {}  # name -> fn; registered below, shared by parent and worker
 
 
+_SINGLE_THREAD_BLAS = {
+    "OMP_NUM_THREADS": "1",
+    "OPENBLAS_NUM_THREADS": "1",
+    "MKL_NUM_THREADS": "1",
+}
+
+
 def _train_procs() -> int:
     env = os.environ.get("SPARK_GRAFT_TRAIN_PROCS")
     if env is not None:
@@ -161,7 +169,11 @@ def _train_procs() -> int:
             return max(0, int(env))
         except ValueError:
             return 0
-    return min(8, max(1, (os.cpu_count() or 2) // 2))
+    # imported here, not at module top: pool workers exec this file in
+    # a bare interpreter that must not import pyspark
+    from write_optimized_vector_database_spark.session import usable_cpus
+
+    return min(8, max(1, usable_cpus() // 2))
 
 
 def _send_obj(stream, obj) -> None:
@@ -220,6 +232,9 @@ class _WorkerPool:
                 [sys.executable, "-c", code, os.path.abspath(__file__)],
                 stdin=subprocess.PIPE,
                 stdout=subprocess.PIPE,
+                # one BLAS thread per worker: the pool is the parallelism,
+                # and per-worker BLAS pools oversubscribe the cores
+                env={**os.environ, **_SINGLE_THREAD_BLAS},
                 # stderr inherited: a crashing worker says why in our log
             )
             for _ in range(procs)

@@ -12,7 +12,16 @@ import os
 
 from pyspark.sql import SparkSession
 
-DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+
+def usable_cpus() -> int:
+    """Cores the engine's CPU-bound pools size from: SPARK_GRAFT_CPUS
+    when set, else the cores this process may run on (its affinity
+    mask, not the host's core count)."""
+    env = os.environ.get("SPARK_GRAFT_CPUS")
+    return int(env) if env else len(os.sched_getaffinity(0))
+
+
+DEFAULT_SHUFFLE_PARTITIONS = usable_cpus()
 
 
 def get_spark(
@@ -27,8 +36,7 @@ def get_spark(
     small shuffle partitions — at 100 TB this is what turns a static
     32-partition plan into one sized by the data.
     """
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    master = master or f"local[{cpus}]"
+    master = master or f"local[{usable_cpus()}]"
     builder = (
         SparkSession.builder.master(master)
         .appName(app_name)
