@@ -924,10 +924,11 @@ def main() -> None:
                 m_ = coll._meta()
                 idx = coll.stable_index_df(m_)
                 cents_p, books_p = coll._index_artifacts(m_)
+                crows_p, cbt_p = coll._index_artifacts_np(m_)
                 tp0 = time.time()
                 ivfpq_adc_topk(
                     idx, qdf, cents_p, books_p, k=40, nprobe=8,
-                    metric="ip", vec_id_col="id",
+                    metric="ip", vec_id_col="id", _cb_np=cbt_p, _crows=crows_p,
                 ).count()
                 wall = (time.time() - tp0) * 1000.0
                 release_query_broadcasts()
@@ -1088,12 +1089,14 @@ def main() -> None:
                     exact_topk,
                 )
 
-                idx_df = coll.stable_index_df()
-                cents, codebooks = coll._index_artifacts()
+                m_ = coll._meta()
+                idx_df = coll.stable_index_df(m_)
+                cents, codebooks = coll._index_artifacts(m_)
+                crows, cbt = coll._index_artifacts_np(m_)
                 tp = time.time()
                 ivfpq_adc_topk(
                     idx_df, qdf, cents, codebooks, k=40, nprobe=8,
-                    metric="ip", vec_id_col="id",
+                    metric="ip", vec_id_col="id", _cb_np=cbt, _crows=crows,
                 ).count()
                 adc_s = time.time() - tp
                 release_query_broadcasts()

@@ -65,15 +65,18 @@ def test_training_entrypoints_never_collect_unbounded(spark):
     that must mean 'bounded default sample', never 'the whole table'."""
     import numpy as np
 
-    from write_optimized_vector_database_spark.operators.pq import (
-        train_pq_codebooks_kmeans,
+    from write_optimized_vector_database_spark.operators.ivfpq import (
+        train_ivfpq_codebooks,
     )
 
     rng = np.random.RandomState(0)
     rows = [(i, [float(x) for x in rng.randn(8)]) for i in range(3_000)]
     df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    # cap of 256·2^2 = 1024 < 3000 rows: must succeed and train on a sample
-    cb = train_pq_codebooks_kmeans(df, dim=8, m=2, nbits=2, max_train_rows=500)
+    cents = spark.createDataFrame(
+        [(0, [0.0] * 8), (1, [1.0] * 8)], "centroid_id int, centroid array<double>"
+    )
+    # cap of 64·2^2 = 256 < 3000 rows: must succeed and train on a sample
+    cb = train_ivfpq_codebooks(df, cents, dim=8, m=2, nbits=2)
     assert cb.count() == 2 * 4  # m × 2^nbits codebook rows
 
 

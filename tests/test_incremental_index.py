@@ -258,8 +258,11 @@ def test_fold_overlays_consolidate_and_reader_plans_survive(spark, coll):
     assert on_disk == live_dirs
     _assert_views_live(coll)
     assert _index_rows(spark, coll.path) == want
-    # a full rebuild resets the overlay map and retires its dirs
+    # a full rebuild resets the overlay map and retires its dirs, and
+    # keeps the read view of the unchanged snapshot
     coll.build_indexes(nlist=8, m=4, nbits=4)
+    snap = coll._current_dir().rsplit("/", 1)[-1]
+    assert snap in coll._artifact_cache["views"]
     assert coll._meta()["index_fold_overrides"] == {}
     coll._gc_generations("index", retention_s=0.0)
     assert not any(

@@ -14,6 +14,7 @@ from write_optimized_vector_database_spark.operators.ivf import (
 )
 from write_optimized_vector_database_spark.operators.ivfpq import (
     assign_centroids,
+    ivfpq_adc_topk,
     ivfpq_encode,
     ivfpq_two_phase_topk,
     residualize,
@@ -155,6 +156,26 @@ def test_spilled_two_phase_no_duplicates_and_recall(emb, queries, cents, cb, exa
         r[name] = recall_at_k(out, exact, 10).agg(F.avg("recall")).first()[0]
     assert r["s2"] >= r["s1"], r
     idx1.unpersist(); idx2.unpersist()
+
+
+def test_release_query_broadcasts(index, queries, cents, cb):
+    """ADVICE r07: each ADC call registers its LUT broadcast; a serving
+    wrapper releases them eagerly after materialization, and a released
+    registry must not break subsequent queries."""
+    from write_optimized_vector_database_spark.operators.pq import (
+        _QUERY_BROADCASTS,
+        release_query_broadcasts,
+    )
+
+    release_query_broadcasts()  # drain anything earlier tests registered
+    ivfpq_adc_topk(index, queries, cents, cb, k=10, nprobe=NPROBE).count()
+    assert len(_QUERY_BROADCASTS) >= 1
+    assert release_query_broadcasts() >= 1
+    assert not _QUERY_BROADCASTS
+    # the path still serves after a release (fresh broadcast per call)
+    n = ivfpq_adc_topk(index, queries, cents, cb, k=10, nprobe=NPROBE).count()
+    assert n > 0
+    release_query_broadcasts()
 
 
 def test_spill_guard():

@@ -1,10 +1,11 @@
 """OPQ gates (reference config.h:90 `use_opq = true`).
 
 OPQ-NP (Ge et al., CVPR 2013): an orthogonal rotation learned by
-alternating PQ fit / procrustes must (a) stay orthogonal, (b) not
-increase quantization error vs plain PQ at equal (m, nbits), and
-(c) keep two-phase recall@10 at the reference's ≥0.95 bar
-(types.h:140)."""
+alternating PQ fit / procrustes must (a) stay orthogonal, (b) preserve
+inner products, and (c) not increase quantization error vs plain PQ at
+equal (m, nbits). Two-phase recall with the rotation is gated at the
+collection level (test_two_phase_collection.py,
+test_opq_spilled_collection_round_trip)."""
 
 from __future__ import annotations
 
@@ -12,14 +13,11 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
-from write_optimized_vector_database_spark.operators.ivf import recall_at_k
 from write_optimized_vector_database_spark.operators.pq import (
     _pq_fit_np,
-    opq_two_phase_topk,
     rotate_vectors,
     train_opq,
 )
-from write_optimized_vector_database_spark.operators.topk import exact_topk
 from write_optimized_vector_database_spark.sources.tables import load_table
 
 DIM, M, NBITS = 64, 16, 5
@@ -67,33 +65,3 @@ def test_opq_error_not_worse_than_pq(emb, trained):
     _, _, recon_opq = _pq_fit_np(xr, M, 2**NBITS, None, rng)
     err_opq = ((xr - recon_opq) ** 2).sum(-1).mean()
     assert err_opq <= err_pq * 1.02  # allow 2% kmeans-init noise
-
-
-def test_opq_two_phase_recall_gate(emb, trained):
-    r_mat, cb = trained
-    queries = emb.filter(F.col("vec_id") < 20).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
-    )
-    exact = exact_topk(emb, queries, k=10, metric="ip")
-    approx = opq_two_phase_topk(
-        emb, queries, r_mat, cb, k=10, rerank_factor=4, metric="ip"
-    )
-    rec = recall_at_k(approx, exact, k=10)
-    mean_recall = rec.agg(F.avg("recall")).collect()[0][0]
-    assert mean_recall >= 0.95, f"OPQ two-phase mean recall@10 {mean_recall}"
-
-
-def test_fused_opq_encode_matches_rotate_then_encode(emb, trained):
-    """opq_encode (one Arrow pass) must produce the same codes as the
-    two-pass rotate_vectors → pq_encode composition."""
-    from write_optimized_vector_database_spark.operators.pq import opq_encode, pq_encode
-
-    r_mat, cb = trained
-    fused = {r.vec_id: list(r.codes) for r in opq_encode(emb, r_mat, cb).select("vec_id", "codes").collect()}
-    twopass = {
-        r.vec_id: list(r.codes)
-        for r in pq_encode(rotate_vectors(emb, r_mat, "embedding"), cb)
-        .select("vec_id", "codes")
-        .collect()
-    }
-    assert fused == twopass

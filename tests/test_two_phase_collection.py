@@ -120,26 +120,6 @@ def test_ivf_topk_k_guard(coll, queries):
         coll.topk_ivf(queries, k=10_001)
 
 
-def test_raw_code_index_still_dispatches(spark, tmp_path_factory, sf_dir, queries):
-    """residual=False rebuilds the pre-residual raw-code index; the read
-    path must dispatch on the manifest flag and stay correct."""
-    from write_optimized_vector_database_spark.operators.changelog import (
-        synthetic_changelog,
-    )
-
-    c = VectorCollection(
-        spark, str(tmp_path_factory.mktemp("rawpq") / "c"), metric="ip"
-    )
-    c.ingest(synthetic_changelog(spark, sf_dir))
-    c.compact()
-    c.build_indexes(nlist=16, m=8, nbits=8, residual=False)
-    assert c._meta().get("index_residual") is False
-    exact = c.topk(queries, k=10)
-    approx = c.topk_two_phase(queries, k=10, nprobe=12, rerank_factor=4)
-    rec = recall_at_k(approx, exact, 10).agg(F.avg("recall")).collect()[0][0]
-    assert rec >= 0.9, f"raw-code two-phase recall {rec}"
-
-
 def test_opq_spilled_collection_round_trip(spark, tmp_path_factory, sf_dir, queries):
     """build_indexes(spill=2, use_opq=True): the manifest records both
     knobs, the read path rotates only the query batch and dedups the

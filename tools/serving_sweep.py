@@ -250,12 +250,14 @@ def run_growth(spark, gens: int, synthetic_n: int = 0, dim: int = 768,
             # merged view (round 13): folds land in overlay dirs, so a
             # raw base-dir read would miss every folded row and keep
             # probing the gen-0 index while index_rows doubles
-            idx = coll.stable_index_df()
-            cents, codebooks = coll._index_artifacts()
+            meta = coll._meta()
+            idx = coll.stable_index_df(meta)
+            cents, codebooks = coll._index_artifacts(meta)
+            crows, cbt = coll._index_artifacts_np(meta)
             t0 = time.time()
             ivfpq_adc_topk(
                 idx, qdf, cents, codebooks, k=40, nprobe=8,
-                metric="ip", vec_id_col="id",
+                metric="ip", vec_id_col="id", _cb_np=cbt, _crows=crows,
             ).count()
             release_query_broadcasts()
             return time.time() - t0

@@ -94,7 +94,10 @@ def run_batch(
             # else the plain-IVF index from build_ivf_index(). Both take
             # the full QueryRequest filter surface as of r07, so a
             # filtered request never falls back to an unindexed scan.
-            has_stable = collection.fs.exists(collection._stable_index_path())
+            meta = collection._meta()
+            has_stable = "index_stable_path" in meta and collection.fs.exists(
+                collection._stable_index_path(meta)
+            )
             if has_stable:
                 part = collection.topk_two_phase(
                     qdf,

@@ -220,14 +220,12 @@ class VectorCollection:
         # cache, config.h:96-99 memory_cache_mb): centroids + codebooks
         # are a few MB even at stable-index scale (nlist×dim + m·2^nbits
         # ·d_sub doubles) but every search call was re-reading their
-        # parquet and re-collecting. Keyed by index epoch — a rebuild
-        # or refresh invalidates; persisted DataFrames are unpersisted
-        # on eviction. The small lock keeps populate/evict structurally
-        # consistent when query threads race the maintenance worker
-        # (unpersist on an in-use frame is safe — Spark recomputes —
-        # so only the cache dict itself needs guarding).
-        # The same cache holds the read views of immutable generation
-        # dirs under "views" (dir name → DataFrame, see _read_dir).
+        # parquet and re-collecting. Two entries: "idx_np" holds their
+        # driver-side ndarray forms, keyed by build (see _np_cache_key),
+        # and "views" maps each immutable generation dir name to its
+        # read view (see _read_dir). The small lock keeps populate/
+        # evict structurally consistent when query threads race the
+        # maintenance worker.
         self._artifact_cache: dict = {}
         self._artifact_cache_lock = threading.Lock()
 
@@ -860,8 +858,13 @@ class VectorCollection:
             return 0
         cut = snap_epoch
         if retain_for_index:
-            idx_epoch = self._index_epoch()
-            if idx_epoch >= 0 and self.fs.exists(self._stable_index_path()):
+            meta = self._meta()
+            idx_epoch = self._index_epoch(meta)
+            if (
+                idx_epoch >= 0
+                and "index_stable_path" in meta
+                and self.fs.exists(self._stable_index_path(meta))
+            ):
                 cut = min(cut, idx_epoch)
         changelog_dir = f"{self.path}/changelog"
         files = [
@@ -987,16 +990,15 @@ class VectorCollection:
         """(posting lists, centroids) read views of the live plain-IVF
         generation named by `meta` (see _read_dir)."""
         return (
-            self._read_dir(meta.get("ivf_index_path", "index_ivf")),
-            self._read_dir(meta.get("ivf_centroids_path", "index_centroids")),
+            self._read_dir(meta["ivf_index_path"]),
+            self._read_dir(meta["ivf_centroids_path"]),
         )
 
     def _ivf_index_path(self, meta: dict | None = None) -> str:
-        """Live plain-IVF index dir via the manifest pointer (round 12);
-        legacy collections fall back to the unversioned dir."""
-        return f"{self.path}/" + (self._meta() if meta is None else meta).get(
-            "ivf_index_path", "index_ivf"
-        )
+        """Live plain-IVF index dir via the manifest pointer (round 12)."""
+        return f"{self.path}/" + (self._meta() if meta is None else meta)[
+            "ivf_index_path"
+        ]
 
     def build_indexes(
         self,
@@ -1005,7 +1007,6 @@ class VectorCollection:
         nbits: int = 8,
         sample_fraction: float | None = None,
         seed: int = 42,
-        residual: bool = True,
         spill: int = 1,
         use_opq: bool = False,
         target_recall: float | None = None,
@@ -1024,11 +1025,9 @@ class VectorCollection:
         after this call lives in the *delta generation* (the tail) until
         the next build. Records the index epoch so reads know the split.
 
-        `residual=True` (default) PQ-encodes x − centroid instead of x —
-        the FAISS IVFPQ formulation: residuals within a posting list span
-        a much tighter range, so 8-bit codes lose less precision. The
-        choice is recorded in the manifest; the read path dispatches on
-        it, so old raw-code indexes keep working.
+        Codes are of the residual x − centroid, not of x — the FAISS
+        IVFPQ formulation: residuals within a posting list span a much
+        tighter range, so 8-bit codes lose less precision.
 
         `spill` > 1 stores each vector in its `spill` nearest posting
         lists (IVF multiple assignment) — the codes index grows spill×
@@ -1063,16 +1062,11 @@ class VectorCollection:
                 start_config=_start_config,
             )
         from write_optimized_vector_database_spark.operators.ivf import (
-            assign_centroids,
             train_centroids_kmeans,
         )
         from write_optimized_vector_database_spark.operators.ivfpq import (
             ivfpq_encode,
             train_ivfpq_codebooks,
-        )
-        from write_optimized_vector_database_spark.operators.pq import (
-            pq_encode,
-            train_pq_codebooks_kmeans,
         )
 
         # Rebuild-under-ingest atomicity (VERDICT r10 #1): the snapshot
@@ -1138,8 +1132,6 @@ class VectorCollection:
         books_sub = f"index_codebooks_g{gen}"
         rot_sub = f"index_rotation_g{gen}"
         if use_opq:
-            if not residual:
-                raise ValueError("use_opq requires residual=True (the IVFPQ path)")
             from write_optimized_vector_database_spark.operators.pq import (
                 rotate_vectors,
                 train_opq,
@@ -1167,29 +1159,20 @@ class VectorCollection:
                 cur_idx, nlist=nlist, vec_col="vector", id_col="id",
                 sample_fraction=sample_fraction, seed=seed, return_np=True,
             )
-        cb_np = None
-        if residual:
-            # thread the just-trained driver-side forms through training
-            # and encode (round 14, guide §5): the old shape re-collected
-            # the local centroid/codebook frames it had just created —
-            # one Python-worker evaluation of the local relation per
-            # collect, 2-3 per build
-            codebooks, cb_np = train_ivfpq_codebooks(
-                cur_idx, cents, dim=dim, m=m, nbits=nbits, vec_col="vector",
-                id_col="id", sample_fraction=sample_fraction,
-                _cents_np=cents_np, return_np=True,
-            )
-            encoded = ivfpq_encode(
-                cur_idx, cents, codebooks, vec_col="vector", id_col="id", spill=spill,
-                _cb_np=cb_np, _cents_np=cents_np,
-            )
-        else:
-            codebooks = train_pq_codebooks_kmeans(
-                cur, dim=dim, m=m, nbits=nbits, vec_col="vector", id_col="id",
-                sample_fraction=sample_fraction, seed=seed,
-            )
-            assigned = assign_centroids(cur, cents, vec_col="vector")
-            encoded = pq_encode(assigned, codebooks, vec_col="vector")
+        # thread the just-trained driver-side forms through training
+        # and encode (round 14, guide §5): the old shape re-collected
+        # the local centroid/codebook frames it had just created —
+        # one Python-worker evaluation of the local relation per
+        # collect, 2-3 per build
+        codebooks, cb_np = train_ivfpq_codebooks(
+            cur_idx, cents, dim=dim, m=m, nbits=nbits, vec_col="vector",
+            id_col="id", sample_fraction=sample_fraction,
+            _cents_np=cents_np, return_np=True,
+        )
+        encoded = ivfpq_encode(
+            cur_idx, cents, codebooks, vec_col="vector", id_col="id", spill=spill,
+            _cb_np=cb_np, _cents_np=cents_np,
+        )
         # hash-cluster rows by posting list before the partitioned write:
         # without it every input task writes a file into every list dir
         # (tasks × nlist small files); with it each task owns whole lists
@@ -1300,7 +1283,6 @@ class VectorCollection:
                 index_centroids_path=cents_sub,
                 index_codebooks_path=books_sub,
                 **({"index_rotation_path": rot_sub} if use_opq else {}),
-                index_residual=bool(residual),
                 index_spill=int(spill),
                 index_opq=bool(use_opq),
                 index_nlist=int(nlist),
@@ -1328,8 +1310,7 @@ class VectorCollection:
 
         m_ = m  # build knob; the transform shadows `m` with the manifest
         meta_after = self._meta_mutate(_swap)
-        self._evict_index_artifacts()
-        if residual and cb_np is not None and cents_np is not None:
+        if cents_np is not None:
             # seed the ndarray artifact cache from the arrays this build
             # just trained (round 14): the first search/probe against
             # the new generation otherwise re-derives exactly these
@@ -1484,7 +1465,7 @@ class VectorCollection:
             t_build = time.time()
             self.build_indexes(
                 nlist=nlist, nbits=nbits, sample_fraction=sample_fraction,
-                seed=seed, residual=True, **rung, _cur=cur, _centroids=cents0,
+                seed=seed, **rung, _cur=cur, _centroids=cents0,
                 _centroids_np=cents0_np,
                 # correlation stats describe the FINAL index's geometry;
                 # collecting them per discarded rung would only add wall
@@ -1556,7 +1537,7 @@ class VectorCollection:
         self._meta_mutate(_certify)
         return {**chosen, "target_met": bool(target_met)}
 
-    def _save_rotation(self, r_mat, subdir: str = "index_rotation") -> None:
+    def _save_rotation(self, r_mat, subdir: str) -> None:
         # ONE parallelize slice, not createDataFrame(...).coalesce(1):
         # a Python local relation defaults to defaultParallelism slices,
         # and coalesce(1) funnels ALL of them through a single Python
@@ -1583,12 +1564,10 @@ class VectorCollection:
         return (self._meta() if meta is None else meta).get("index_epoch", -1)
 
     def _stable_centroids_path(self, meta: dict | None = None) -> str:
-        """IVF-PQ (stable-generation) centroids. New builds write the
-        dedicated index_centroids_stable; the manifest key keeps indexes
-        written before the split readable."""
-        return f"{self.path}/" + (self._meta() if meta is None else meta).get(
-            "index_centroids_path", "index_centroids"
-        )
+        """IVF-PQ (stable-generation) centroids of the live build."""
+        return f"{self.path}/" + (self._meta() if meta is None else meta)[
+            "index_centroids_path"
+        ]
 
     def _stable_index_subdir(self, meta: dict | None = None) -> str:
         """Live stable-index generation dir name, resolved through the
@@ -1596,14 +1575,11 @@ class VectorCollection:
         and ONE atomic manifest write swaps readers over — queries
         resolve the path per call, so they serve the old generation
         until the swap and the new one after, never a half-written mix.
-        Legacy collections (pre-generation layout) fall back to the
-        unversioned dir. Pass `meta` (ADVICE r11 high) so every path a
-        query resolves comes from ONE manifest snapshot — independent
-        re-reads racing a generation swap yield a mixed view (old
-        posting lists decoded with new codebooks)."""
-        return (self._meta() if meta is None else meta).get(
-            "index_stable_path", "index_stable"
-        )
+        Pass `meta` (ADVICE r11 high) so every path a query resolves
+        comes from ONE manifest snapshot — independent re-reads racing a
+        generation swap yield a mixed view (old posting lists decoded
+        with new codebooks)."""
+        return (self._meta() if meta is None else meta)["index_stable_path"]
 
     def _stable_index_path(self, meta: dict | None = None) -> str:
         return f"{self.path}/{self._stable_index_subdir(meta)}"
@@ -1661,33 +1637,21 @@ class VectorCollection:
         return out
 
     def _codebooks_path(self, meta: dict | None = None) -> str:
-        return f"{self.path}/" + (self._meta() if meta is None else meta).get(
-            "index_codebooks_path", "index_codebooks"
-        )
+        return f"{self.path}/" + (self._meta() if meta is None else meta)[
+            "index_codebooks_path"
+        ]
 
     def _rotation_path(self, meta: dict | None = None) -> str:
-        return f"{self.path}/" + (self._meta() if meta is None else meta).get(
-            "index_rotation_path", "index_rotation"
-        )
-
-    @staticmethod
-    def _unpersist_entry(entry) -> None:
-        if entry is None:
-            return
-        for df in entry[1:]:
-            try:
-                df.unpersist()
-            except Exception:  # noqa: BLE001
-                pass
+        return f"{self.path}/" + (self._meta() if meta is None else meta)[
+            "index_rotation_path"
+        ]
 
     def _evict_index_artifacts(self) -> None:
         """Drop every cached artifact and read view, so the next call
         reads cold."""
         with self._artifact_cache_lock:
-            hit = self._artifact_cache.pop("idx", None)
             self._artifact_cache.pop("idx_np", None)
             self._artifact_cache.pop("views", None)
-        self._unpersist_entry(hit)
 
     def _np_cache_key(self, meta: dict) -> tuple:
         """Cache key for the driver-side artifact forms: build_id PLUS
@@ -1723,12 +1687,11 @@ class VectorCollection:
         """Driver-side ndarray forms of the build artifacts — (centroid
         rows sorted by centroid_id, `_codebooks_np(codebooks)` tuple) —
         cached per build (round 13). These are per-BUILD constants, yet
-        the ADC operator re-collected them from the executor-cached
-        frames on every search call (~0.9 s per call at the bench
-        serving shape). Same snapshot/eviction discipline as
-        _index_artifacts: the key and the paths come from ONE manifest
-        read, and every build/evict drops the entry. Builds seed the
-        entry directly from the arrays they trained
+        the ADC operator re-collected them from the artifact frames on
+        every search call (~0.9 s per call at the bench serving shape).
+        The key and the paths come from ONE manifest read, and a new
+        build's key never matches an older entry. Builds seed the entry
+        directly from the arrays they trained
         (_seed_index_artifacts_np), so the lazy populate below only
         runs for collections opened cold."""
         if meta is None:
@@ -1782,46 +1745,17 @@ class VectorCollection:
     def _index_artifacts(
         self, meta: dict | None = None
     ) -> tuple[DataFrame, DataFrame]:
-        """(centroids, codebooks) for the build described by `meta` (one
-        manifest snapshot — ADVICE r11 high: the cache key AND the
-        artifact paths come from the SAME snapshot, so a generation swap
-        landing between a caller's index-path read and this call can't
-        pair old posting lists with new codebooks), persisted once per
-        build so repeated searches hit executor memory instead of
-        re-scanning the artifact parquet. Keyed on index_build_id — a
-        token build_indexes bumps on EVERY build — not index_epoch,
-        which stays constant when the index is rebuilt with different
-        knobs and no new ingest (stale-cache hazard).
-
-        Populate is swap-and-unpersist ATOMIC (ADVICE r12 low): the old
-        evict-then-insert raced a concurrent populate across the lock —
-        thread A (stale meta) could overwrite thread B's just-inserted
-        entry without unpersisting B's frames, leaking persisted
-        centroids/codebooks under the serving-beside-rebuild pattern.
-        Now the displaced entry is captured INSIDE the lock and
-        unpersisted after release; if another thread already cached the
-        same build, its entry wins and this thread's fresh frames are
-        the ones released."""
+        """(centroids, codebooks) read views of the build described by
+        `meta` (one manifest snapshot — ADVICE r11 high: a generation
+        swap landing between a caller's index-path read and this call
+        can't pair old posting lists with new codebooks). Both dirs are
+        immutable generation dirs, so the views come from _read_dir."""
         if meta is None:
             meta = self._meta()
-        build_id = meta.get("index_build_id", meta.get("index_epoch", -1))
-        with self._artifact_cache_lock:
-            hit = self._artifact_cache.get("idx")
-            if hit is not None and hit[0] == build_id:
-                return hit[1], hit[2]
-        cents = self.spark.read.parquet(self._stable_centroids_path(meta)).persist()
-        codebooks = self.spark.read.parquet(self._codebooks_path(meta)).persist()
-        mine = (build_id, cents, codebooks)
-        with self._artifact_cache_lock:
-            cur = self._artifact_cache.get("idx")
-            if cur is not None and cur[0] == build_id:
-                loser = mine  # lost the populate race; keep the winner
-                cents, codebooks = cur[1], cur[2]
-            else:
-                loser = self._artifact_cache.pop("idx", None)
-                self._artifact_cache["idx"] = mine
-        self._unpersist_entry(loser)
-        return cents, codebooks
+        return (
+            self._read_dir(meta["index_centroids_path"]),
+            self._read_dir(meta["index_codebooks_path"]),
+        )
 
     def refresh_indexes(self) -> dict:
         """Incrementally fold the delta generation into the stable index.
@@ -1852,13 +1786,9 @@ class VectorCollection:
         build_indexes(). Returns {n_touched, n_reencoded,
         n_lists_rewritten, fold_dir, consolidated, needs_rebuild}.
         """
-        from write_optimized_vector_database_spark.operators.ivf import (
-            assign_centroids,
-        )
         from write_optimized_vector_database_spark.operators.ivfpq import (
             ivfpq_encode,
         )
-        from write_optimized_vector_database_spark.operators.pq import pq_encode
 
         # ONE manifest snapshot for the whole fold (ADVICE r11 high):
         # epoch bound, artifact paths, and encode knobs must describe
@@ -1910,12 +1840,7 @@ class VectorCollection:
             touched.unpersist()
             return {"n_touched": 0, "n_reencoded": 0, "n_lists_rewritten": 0}
 
-        cents = self._read_dir(
-            fold_meta.get("index_centroids_path", "index_centroids")
-        )
-        codebooks = self._read_dir(
-            fold_meta.get("index_codebooks_path", "index_codebooks")
-        )
+        cents, codebooks = self._index_artifacts(fold_meta)
         # visible versions of touched ids (deleted ids simply absent);
         # versions newer than fold_hi stay in the delta generation.
         # Specialized window view (round 13, same argument as the
@@ -1934,35 +1859,28 @@ class VectorCollection:
             delta_vis = self._current_view(vis).filter(
                 in_window & F.col("vector").isNotNull()
             )
-        if fold_meta.get("index_residual", False):
-            if fold_meta.get("index_opq", False):
-                from write_optimized_vector_database_spark.operators.pq import (
-                    rotate_vectors,
-                )
+        if fold_meta.get("index_opq", False):
+            from write_optimized_vector_database_spark.operators.pq import (
+                rotate_vectors,
+            )
 
-                delta_vis = rotate_vectors(
-                    delta_vis, self._rotation_np(fold_meta), "vector"
-                )
-            # per-build ndarray artifacts from the cache (round 14): the
-            # fold's encode otherwise re-collects centroids + codebooks
-            # from parquet on every refresh — these are the same
-            # per-build constants the serving path already caches
-            crows_f, cbt_f = self._index_artifacts_np(fold_meta)
-            new_rows = ivfpq_encode(
-                delta_vis, cents, codebooks, vec_col="vector", id_col="id",
-                spill=fold_meta.get("index_spill", 1),
-                _cb_np=cbt_f,
-                _cents_np=(
-                    [int(r.centroid_id) for r in crows_f],
-                    [r.centroid for r in crows_f],
-                ),
+            delta_vis = rotate_vectors(
+                delta_vis, self._rotation_np(fold_meta), "vector"
             )
-        else:
-            assigned = assign_centroids(delta_vis, cents, vec_col="vector")
-            new_rows = pq_encode(assigned, codebooks, vec_col="vector").select(
-                "id", "centroid_id", "codes"
-            )
-        new_rows = new_rows.persist()
+        # per-build ndarray artifacts from the cache (round 14): the
+        # fold's encode otherwise re-collects centroids + codebooks
+        # from parquet on every refresh — these are the same
+        # per-build constants the serving path already caches
+        crows_f, cbt_f = self._index_artifacts_np(fold_meta)
+        new_rows = ivfpq_encode(
+            delta_vis, cents, codebooks, vec_col="vector", id_col="id",
+            spill=fold_meta.get("index_spill", 1),
+            _cb_np=cbt_f,
+            _cents_np=(
+                [int(r.centroid_id) for r in crows_f],
+                [r.centroid for r in crows_f],
+            ),
+        ).persist()
 
         # the fold reads the MERGED view (base + live overlays): earlier
         # folds' output lives in overlay dirs, not the base generation
@@ -2322,8 +2240,9 @@ class VectorCollection:
         from write_optimized_vector_database_spark.operators.filters import (
             apply_query_filters,
         )
-        from write_optimized_vector_database_spark.operators.ivf import probe_centroids
-        from write_optimized_vector_database_spark.operators.pq import pq_adc_topk
+        from write_optimized_vector_database_spark.operators.ivfpq import (
+            ivfpq_adc_topk,
+        )
         from write_optimized_vector_database_spark.operators.topk import (
             exact_topk,
             score_column,
@@ -2477,9 +2396,6 @@ class VectorCollection:
                 )
                 if support is not None:
                     probe_support = {int(c) for c in support}
-                    cents = cents.filter(
-                        F.col("centroid_id").isin(list(probe_support))
-                    )
             else:
                 # permissive filter: over-fetch so ~budget survivors
                 # remain after the rerank join drops non-matching rows
@@ -2494,53 +2410,35 @@ class VectorCollection:
 
         # stable candidates: probe → ADC over pruned posting lists.
         # cosine collections are L2-normalized at ingest, so ADC runs IP
-        # (the cosine→IP reduction, types.h:40). Residual indexes (the
-        # build_indexes default) score codes of x − centroid with the
-        # per-list offset; raw-code indexes use the plain PQ LUT.
+        # (the cosine→IP reduction, types.h:40). Codes are of x −
+        # centroid, scored with the per-list offset.
         adc_metric = "ip" if self.metric == "cosine" else self.metric
-        if meta.get("index_residual", False):
-            from write_optimized_vector_database_spark.operators.ivfpq import (
-                ivfpq_adc_topk,
+        adc_queries = queries
+        if meta.get("index_opq", False):
+            # the index lives in OPQ-rotated space: rotate the tiny
+            # query batch for the ADC phase only — the exact rerank
+            # below stays in the original space (IP/L2 are invariant
+            # under the orthogonal R, so the final scores are exact)
+            from write_optimized_vector_database_spark.operators.pq import (
+                rotate_vectors,
             )
 
-            adc_queries = queries
-            if meta.get("index_opq", False):
-                # the index lives in OPQ-rotated space: rotate the tiny
-                # query batch for the ADC phase only — the exact rerank
-                # below stays in the original space (IP/L2 are invariant
-                # under the orthogonal R, so the final scores are exact)
-                from write_optimized_vector_database_spark.operators.pq import (
-                    rotate_vectors,
-                )
-
-                adc_queries = rotate_vectors(
-                    queries, self._rotation_np(meta), "query_vec"
-                )
-            # per-build ndarray artifact cache (round 13): the operator
-            # would otherwise re-collect centroids+codebooks from the
-            # executor-cached frames on EVERY call; the support prune is
-            # applied to the cached rows driver-side — same rows the
-            # filtered frame collect would return
-            crows, cbt = self._index_artifacts_np(meta)
-            if probe_support is not None:
-                crows = [
-                    r for r in crows if int(r.centroid_id) in probe_support
-                ]
-            stable_cand = ivfpq_adc_topk(
-                index, adc_queries, cents, codebooks, k=budget, nprobe=nprobe,
-                metric=adc_metric, vec_id_col="id",
-                dedup_candidates=meta.get("index_spill", 1) > 1,
-                _cb_np=cbt, _crows=crows,
-            ).select("query_id", F.col("vec_id").alias("id"))
-        else:
-            probes = probe_centroids(queries, cents, nprobe)
-            pruned = index.join(
-                F.broadcast(probes.select("centroid_id").distinct()), "centroid_id"
+            adc_queries = rotate_vectors(
+                queries, self._rotation_np(meta), "query_vec"
             )
-            stable_cand = pq_adc_topk(
-                pruned, queries, codebooks, k=budget,
-                metric=adc_metric, vec_id_col="id",
-            ).select("query_id", F.col("vec_id").alias("id"))
+        # per-build ndarray artifact cache (round 13): the operator
+        # would otherwise re-collect centroids+codebooks from the
+        # artifact frames on EVERY call; the support prune is applied
+        # to the cached rows driver-side
+        crows, cbt = self._index_artifacts_np(meta)
+        if probe_support is not None:
+            crows = [r for r in crows if int(r.centroid_id) in probe_support]
+        stable_cand = ivfpq_adc_topk(
+            index, adc_queries, cents, codebooks, k=budget, nprobe=nprobe,
+            metric=adc_metric, vec_id_col="id",
+            dedup_candidates=meta.get("index_spill", 1) > 1,
+            _cb_np=cbt, _crows=crows,
+        ).select("query_id", F.col("vec_id").alias("id"))
 
         # delta candidates: exact over everything visible that changed
         # after the index build. Sourced from current() (not the raw
@@ -3373,10 +3271,9 @@ class VectorCollection:
         return {
             "index_epoch": meta.get("index_epoch"),
             "index_build_id": meta.get("index_build_id"),
-            "residual": meta.get("index_residual"),
             "spill": meta.get("index_spill"),
             "opq": meta.get("index_opq"),
-            "centroids_path": meta.get("index_centroids_path", "index_centroids"),
+            "centroids_path": meta.get("index_centroids_path"),
             "auto_tune": meta.get("auto_tune"),
             "serving_nprobe": self._default_nprobe(meta=meta),
             "certified": bool(
@@ -3416,7 +3313,7 @@ class VectorCollection:
             # which superseded generations are still retained for
             # readers that resolved before a swap (time-based retention
             # as of round 12 — see _gc_generations)
-            "index_path": meta.get("index_stable_path", "index_stable"),
+            "index_path": meta.get("index_stable_path"),
             "index_gen_history": meta.get("index_gen_history", []),
             # the retention contract, surfaced (VERDICT r12 #3): a
             # superseded generation/overlay outlives its swap by this
@@ -3494,8 +3391,8 @@ class VectorCollection:
         `needs_rebuild(alpha)` — the maintenance-loop hook (call it on
         the same cadence as compact(); refresh_indexes() also surfaces
         the flag in its return dict for recommend-only deployments).
-        Reuses the built knobs from the manifest (m/nbits/residual/
-        spill/opq) unless overridden; returns describe_index() after a
+        Reuses the built knobs from the manifest (m/nbits/spill/opq)
+        unless overridden; returns describe_index() after a
         rebuild, None when no rebuild was needed.
 
         Certification survival (VERDICT r10 #2): a knob-explicit
@@ -3530,7 +3427,6 @@ class VectorCollection:
             or int(meta.get("index_nlist", 64)),
             m=int(meta.get("index_m", 8)),
             nbits=int(meta.get("index_nbits", 8)),
-            residual=bool(meta.get("index_residual", True)),
             spill=int(meta.get("index_spill", 1)),
             use_opq=bool(meta.get("index_opq", False)),
         )
@@ -3656,9 +3552,13 @@ class VectorCollection:
             # resolve from whichever index actually exists on disk
             # instead of assuming 'stable' — an IVF-only collection has
             # no index_stable and the blind read would raise (ADVICE r09)
-            if self.fs.exists(self._stable_index_path(meta)):
+            if "index_stable_path" in meta and self.fs.exists(
+                self._stable_index_path(meta)
+            ):
                 label = "stable"
-            elif self.fs.exists(self._ivf_index_path(meta)):
+            elif "ivf_index_path" in meta and self.fs.exists(
+                self._ivf_index_path(meta)
+            ):
                 label = "ivf"
             else:
                 return None  # nothing built — nothing to analyze

@@ -49,7 +49,6 @@ from write_optimized_vector_database_spark.operators.pq import (
     _codebooks_np,
     codebooks_from_stride,
     explode_subspaces,
-    pq_encode,
     pq_encode_exact,
 )
 from write_optimized_vector_database_spark.operators.topk import (

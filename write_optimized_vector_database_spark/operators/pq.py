@@ -6,38 +6,34 @@ a query builds a lookup table (LUT) of per-subspace partial distances
 and scans codes; a final exact rerank on `rerank_factor × top_k`
 candidates restores recall (config.h:92-93, two-phase config.h:132).
 
-Spark design:
-- codebooks: per-subspace KMeans over a hash-sample; a tiny table
-  (m × 2^nbits rows) broadcast to every task;
-- encode: one vectorized mapInPandas pass — per Arrow batch a NumPy
-  argmin per subspace produces an `array<smallint>` codes column; the
-  codes table is ~m bytes/vector instead of 4·dim (the compression that
-  lets a 100 TB collection's scan fit in page cache);
-- ADC scan: queries → LUT (NumPy, driver-side, ≤100 queries × m × k_sub
-  doubles) → mapInPandas gather-sum over the codes column;
-- two-phase: ADC top-(rerank_factor·k) per query, join **back to the
-  full-vector table by id** (sort-merge at scale; the candidate side is
-  tiny so AQE turns it into a broadcast), exact re-score, final top-k.
+The engine's stable index is residual IVF-PQ (operators/ivfpq.py:
+training, encode and ADC scan). This module holds what that path shares
+with the PQ registry queries:
 
-A stride-sampled deterministic codebook variant makes the whole
-pipeline SQL-expressible for the DuckDB oracle (queries_ext.py); the
-KMeans path is recall-gated in tests/test_pq.py.
+- the per-query LUT broadcast registry every ADC call ships through;
+- OPQ: the learned orthogonal rotation (`train_opq`) and the Arrow pass
+  that applies it (`rotate_vectors`);
+- `_codebooks_np`, the driver-side (m, 2^nbits, d_sub) codebook array;
+- deterministic SQL twins — stride codebooks, a Householder rotation,
+  the long-form encode and the two-phase fold — that make the PQ/OPQ
+  pipeline SQL-expressible for the DuckDB oracle (queries_ext.py).
+
+The learned path is recall-gated at the collection level
+(tests/test_two_phase_collection.py) and per operator in
+tests/test_ivfpq.py.
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
 import numpy as np
-import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from write_optimized_vector_database_spark.functions.hashing import (
     bounded_training_sample,
     deterministic_sample,
 )
-from write_optimized_vector_database_spark.operators.topk import score_column, topk_per_group
+from write_optimized_vector_database_spark.operators.topk import topk_per_group
 
 # Per-query broadcast registry (ADVICE r07): every ADC call ships its
 # LUT to executors as a broadcast (~19 MiB at the API's max batch of 100
@@ -92,64 +88,6 @@ def subspace_dims(dim: int, m: int) -> int:
     if dim % m != 0:
         raise ValueError(f"dim {dim} not divisible by m {m}")
     return dim // m
-
-
-def train_pq_codebooks_kmeans(
-    vectors: DataFrame,
-    dim: int,
-    m: int,
-    nbits: int = 8,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    sample_fraction: float | None = None,
-    seed: int = 42,
-    max_train_rows: int | None = None,
-    return_np: bool = False,
-):
-    """Per-subspace KMeans codebooks → (subspace, code, cvec).
-
-    Trains on a deterministic hash-sample collected to the driver (PQ
-    training needs O(2^nbits × 1k) rows per subspace — never the full
-    table; reference trains codebooks offline the same way). The sample
-    is ALWAYS bounded: `max_train_rows` defaults to 64 × 2^nbits (64 training points per codeword — ample for the low-dim subquantizers, FAISS-recommended range), so an
-    unset `sample_fraction` can never collect a 100 TB table.
-    """
-    d_sub = subspace_dims(dim, m)
-    k = 2**nbits
-    cap = max_train_rows if max_train_rows is not None else 64 * k
-    train = vectors
-    if sample_fraction is not None and sample_fraction < 1.0:
-        train = train.filter(deterministic_sample(id_col, sample_fraction, salt="pq"))
-    train = bounded_training_sample(train, id_col, cap, salt="pq-cap")
-    from write_optimized_vector_database_spark.functions.nputil import collect_vectors_np
-
-    sample = collect_vectors_np(train, vec_col)
-    # Subspaces are independent (per-subspace seeds), so the m k-means
-    # runs fan out over the training process pool (round 14, guide §1.2:
-    # the driver NumPy was the serialized hot spot of every build once
-    # Spark-side passes were sample-bounded). Each worker runs the SAME
-    # per-subspace computation with the SAME RandomState(seed+s) —
-    # bit-identical to the sequential loop (verified: np.array_equal on
-    # every subspace). A THREAD pool loses to the GIL (argmin/bincount
-    # hold it; measured 1.4x at best); the spawn pool measured 5-9x warm
-    # at the build_indexes_ivfpq shape.
-    centers_all = kmeans_subspaces(
-        sample, m, d_sub, k, seed, max_iter=25, init_pp=True
-    )
-    rows = []
-    for s, centers in enumerate(centers_all):
-        rows.extend(
-            (s, int(c), [float(x) for x in centers[c]]) for c in range(len(centers))
-        )
-    # ONE parallelize slice — only ever written/broadcast/collected
-    spark = vectors.sparkSession
-    df = spark.createDataFrame(
-        spark.sparkContext.parallelize(rows, 1),
-        "subspace int, code int, cvec array<double>",
-    )
-    if return_np:
-        return df, _cb_tuple_from_centers(centers_all)
-    return df
 
 
 # k-means kernels live in functions/kmeans_pool.py (round 14: the
@@ -245,7 +183,7 @@ def pq_encode_exact(
 ) -> DataFrame:
     """Long-form encode (id, subspace, code) via the JVM distance fold —
     bit-identical to the DuckDB oracle's list_distance ordering (ties on
-    ascending code). The NumPy `pq_encode` is the production path."""
+    ascending code). The NumPy `ivfpq_encode` is the production path."""
     from pyspark.sql import Window
 
     from write_optimized_vector_database_spark.functions.distance import l2_distance
@@ -413,7 +351,7 @@ def train_opq(
     centroids and (b) the orthogonal-procrustes update
     R = UVᵀ from SVD(XᵀX̂) — each step non-increasing in ‖XR − X̂‖².
     Training is driver-side on a hash-sample (same budget as
-    `train_pq_codebooks_kmeans`); only the tiny R (dim×dim) and the
+    `train_ivfpq_codebooks`); only the tiny R (dim×dim) and the
     codebooks ship to executors.
 
     Returns (R, codebooks) where codebooks live in the ROTATED space —
@@ -496,118 +434,6 @@ def rotate_vectors(
     return df.mapInArrow(fn, schema=out_schema)
 
 
-def opq_encode(
-    vectors: DataFrame,
-    r_mat: np.ndarray,
-    codebooks: DataFrame,
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Rotate + PQ-encode fused into ONE Arrow pass — the rotated vectors
-    are never materialized. At 100 TB a second full-table Python pass is
-    the dominant cost; this keeps OPQ encode at exactly plain-PQ cost.
-    The output keeps the ORIGINAL (unrotated) vector column: ADC needs
-    only `codes`, and the rerank wants originals anyway."""
-    cb, m, _k = _codebooks_np(codebooks)
-    d_sub = cb.shape[2]
-    cb_sq = (cb * cb).sum(-1)
-    # broadcast, not closure: R + codebooks are ~6.1 MiB at the reference
-    # shape (dim=768, m=96) — see rotate_vectors
-    bc = vectors.sparkSession.sparkContext.broadcast(
-        (np.asarray(r_mat, dtype=np.float64), cb, cb_sq)
-    )
-
-    from write_optimized_vector_database_spark.functions.nputil import (
-        arrow_list_column,
-        arrow_matrix,
-    )
-
-    def fn(batches):
-        r64, cb_, cb_sq_ = bc.value
-        for batch in batches:
-            if not batch.num_rows:
-                continue
-            v = arrow_matrix(batch, vec_col) @ r64  # rotate fused in
-            codes = np.empty((len(v), m), dtype=np.int32)
-            for s in range(m):
-                sub = v[:, s * d_sub : (s + 1) * d_sub]
-                d = cb_sq_[s][None, :] - 2.0 * (sub @ cb_[s].T)
-                codes[:, s] = d.argmin(1)
-            yield batch.append_column("codes", arrow_list_column(codes))
-
-    from pyspark.sql import types as T
-
-    out_schema = T.StructType(
-        list(vectors.schema.fields)
-        + [T.StructField("codes", T.ArrayType(T.IntegerType()))]
-    )
-    return vectors.mapInArrow(fn, schema=out_schema)
-
-
-def opq_two_phase_topk(
-    vectors: DataFrame,
-    queries: DataFrame,
-    r_mat: np.ndarray,
-    codebooks: DataFrame,
-    k: int = 10,
-    rerank_factor: int = 4,
-    metric: str = "ip",
-    vec_id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """OPQ two-phase search: ADC runs in the rotated space (rotation
-    preserves both IP and L2, so the LUT semantics are unchanged); the
-    exact rerank re-scores ORIGINAL vectors fetched by id, so the final
-    top-k is exact over the candidate set.
-
-    Queries rotate driver-side (batch contract caps them at 100 rows,
-    config.h:180) — no Spark job for a 100-row matmul."""
-    from pyspark.sql import types as T
-
-    enc = opq_encode(vectors, r_mat, codebooks, vec_col=vec_col)
-    r64 = np.asarray(r_mat, dtype=np.float64)
-    qrows = queries.select("query_id", "query_vec").collect()
-    # Keep the caller's query_id type (string/UUID ids must round-trip).
-    rq_schema = T.StructType(
-        [
-            queries.schema["query_id"],
-            T.StructField("query_vec", T.ArrayType(T.DoubleType())),
-        ]
-    )
-    rq = queries.sparkSession.createDataFrame(
-        [
-            (
-                r.query_id,
-                [float(x) for x in np.asarray(r.query_vec, dtype=np.float64) @ r64],
-            )
-            for r in qrows
-        ],
-        rq_schema,
-    )
-    from write_optimized_vector_database_spark.config import candidate_budget
-
-    cand = pq_adc_topk(
-        enc, rq, codebooks, k=candidate_budget(k, rerank_factor),
-        metric=metric, vec_id_col=vec_id_col,
-    ).select("query_id", "vec_id")
-    full = vectors.select(
-        F.col(vec_id_col).alias("vec_id"), F.col(vec_col).alias("__vec")
-    )
-    # budget-bounded candidate set: broadcast it so the vector table is
-    # fetched, never shuffled, to meet it (guide §3.1)
-    rescored = (
-        full.join(F.broadcast(cand), "vec_id")
-        .join(F.broadcast(queries), "query_id")
-        .select(
-            "query_id",
-            "vec_id",
-            score_column(metric, "query_vec", "__vec").alias("score"),
-        )
-    )
-    return topk_per_group(
-        rescored, group_cols=["query_id"], score_col="score", id_col="vec_id", k=k
-    ).select("query_id", "vec_id", "score", "rank")
-
-
 def _codebooks_np(codebooks: DataFrame) -> tuple[np.ndarray, int, int]:
     rows = sorted(codebooks.collect(), key=lambda r: (r.subspace, r.code))
     m = max(r.subspace for r in rows) + 1
@@ -617,169 +443,3 @@ def _codebooks_np(codebooks: DataFrame) -> tuple[np.ndarray, int, int]:
     for r in rows:
         cb[r.subspace, r.code] = r.cvec
     return cb, m, k
-
-
-def pq_encode(
-    vectors: DataFrame,
-    codebooks: DataFrame,
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Add `codes: array<int>` (length m) — nearest codeword per subspace.
-    One Arrow pass; per batch the work is m NumPy matrix multiplies."""
-    cb, m, k = _codebooks_np(codebooks)
-    d_sub = cb.shape[2]
-    # codebooks go out as a broadcast (once per executor, not per task
-    # closure): dim·256 doubles is 1.5 MiB at the reference dim=768
-    bc = vectors.sparkSession.sparkContext.broadcast((cb, (cb * cb).sum(-1)))
-
-    from write_optimized_vector_database_spark.functions.nputil import (
-        arrow_list_column,
-        arrow_matrix,
-    )
-
-    def fn(batches):
-        import pyarrow as pa  # noqa: F401
-
-        cb_, cb_sq = bc.value
-        for batch in batches:
-            if not batch.num_rows:
-                continue
-            v = arrow_matrix(batch, vec_col)  # (n, dim), one reshape
-            codes = np.empty((len(v), m), dtype=np.int32)
-            for s in range(m):
-                sub = v[:, s * d_sub : (s + 1) * d_sub]
-                d = cb_sq[s][None, :] - 2.0 * (sub @ cb_[s].T)
-                codes[:, s] = d.argmin(1)
-            yield batch.append_column("codes", arrow_list_column(codes))
-
-    from pyspark.sql import types as T
-
-    # note: StructType.add mutates in place — never call it on df.schema
-    out_schema = T.StructType(
-        list(vectors.schema.fields)
-        + [T.StructField("codes", T.ArrayType(T.IntegerType()))]
-    )
-    return vectors.mapInArrow(fn, schema=out_schema)
-
-
-def pq_adc_topk(
-    encoded: DataFrame,
-    queries: DataFrame,
-    codebooks: DataFrame,
-    k: int = 10,
-    metric: str = "ip",
-    vec_id_col: str = "vec_id",
-) -> DataFrame:
-    """Approximate top-k from codes only (asymmetric distance computation).
-
-    The LUT — per (query, subspace, code) partial score — is built
-    driver-side with NumPy and closed over an Arrow-batched scan of the
-    codes column: `score = Σ_s LUT[q, s, codes[s]]`, a pure gather-sum
-    that never touches full vectors.
-    """
-    cb, m, _ = _codebooks_np(codebooks)
-    d_sub = cb.shape[2]
-    qrows = queries.select("query_id", "query_vec").collect()
-    qids = np.asarray([r.query_id for r in qrows])
-    qv = np.asarray([np.asarray(r.query_vec, dtype=np.float64) for r in qrows])
-    # LUT[q, s, c]
-    if metric == "ip":
-        lut = np.einsum("qsd,skd->qsk", qv.reshape(len(qv), m, d_sub), cb)
-    elif metric == "l2":
-        diff = qv.reshape(len(qv), m, 1, d_sub) - cb[None, :, :, :]
-        # Squared sub-distances: the gather-sum then yields Σ_s‖q_s−c_s‖²,
-        # the standard ADC decomposition whose ordering matches true L2.
-        # (Summing sqrt'd sub-distances would be an L1-of-L2 proxy.)
-        lut = -((diff**2).sum(-1))  # negated: higher-better
-    else:
-        raise ValueError(f"ADC unsupported for metric {metric!r}")
-
-    from write_optimized_vector_database_spark.functions.nputil import arrow_matrix
-
-    # LUT as a broadcast: Q·m·k doubles is ~19 MiB at the API's max batch
-    # (100 queries) at the reference shape m=96 — once per executor, not
-    # re-serialized into every scan task
-    lut_bc = _register_query_broadcast(
-        encoded.sparkSession.sparkContext.broadcast(lut)
-    )
-
-    def fn(batches):
-        import pyarrow as pa
-
-        lut_ = lut_bc.value
-        s_idx = np.arange(m)
-        nq = len(qids)
-        qarr = pa.array(list(qids))
-        for batch in batches:
-            n = batch.num_rows
-            if not n:
-                continue
-            codes = arrow_matrix(batch, "codes", dtype=np.int64)  # (n, m)
-            # (q, n): sum over subspaces of LUT[q, s, codes[n, s]]
-            scores = lut_[:, s_idx, codes].sum(-1)
-            ids = batch.column(batch.schema.get_field_index(vec_id_col))
-            yield pa.RecordBatch.from_arrays(
-                [
-                    qarr.take(pa.array(np.repeat(np.arange(nq), n))),
-                    ids.take(pa.array(np.tile(np.arange(n), nq))),
-                    pa.array(scores.reshape(-1), pa.float64()),
-                ],
-                names=["query_id", "vec_id", "score"],
-            )
-
-    from pyspark.sql import types as T
-
-    # id column types follow the inputs — uuidv7 string ids must survive.
-    scored_schema = T.StructType(
-        [
-            T.StructField("query_id", queries.schema["query_id"].dataType),
-            T.StructField("vec_id", encoded.schema[vec_id_col].dataType),
-            T.StructField("score", T.DoubleType()),
-        ]
-    )
-    scored = encoded.select(F.col(vec_id_col), "codes").mapInArrow(
-        fn, schema=scored_schema
-    )
-    return topk_per_group(
-        scored, group_cols=["query_id"], score_col="score", id_col="vec_id", k=k
-    ).select("query_id", "vec_id", "score", "rank")
-
-
-def two_phase_topk(
-    vectors: DataFrame,
-    encoded: DataFrame,
-    queries: DataFrame,
-    codebooks: DataFrame,
-    k: int = 10,
-    rerank_factor: int = 4,
-    metric: str = "ip",
-    vec_id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Two-phase search (reference two-phase-engine, config.h:132):
-    phase 1 ADC candidates (rerank_factor × k, config.h:93, clamped to
-    max_candidates, config.h:129), phase 2 exact re-score on full
-    vectors fetched by id, final top-k."""
-    from write_optimized_vector_database_spark.config import candidate_budget
-
-    cand = pq_adc_topk(
-        encoded, queries, codebooks, k=candidate_budget(k, rerank_factor),
-        metric=metric, vec_id_col=vec_id_col,
-    ).select("query_id", "vec_id")
-    full = vectors.select(
-        F.col(vec_id_col).alias("vec_id"), F.col(vec_col).alias("__vec")
-    )
-    # budget-bounded candidate set: broadcast it so the vector table is
-    # fetched, never shuffled, to meet it (guide §3.1)
-    rescored = (
-        full.join(F.broadcast(cand), "vec_id")
-        .join(F.broadcast(queries), "query_id")
-        .select(
-            "query_id",
-            "vec_id",
-            score_column(metric, "query_vec", "__vec").alias("score"),
-        )
-    )
-    return topk_per_group(
-        rescored, group_cols=["query_id"], score_col="score", id_col="vec_id", k=k
-    ).select("query_id", "vec_id", "score", "rank")

@@ -687,8 +687,9 @@ def vec_opq_two_phase(spark: SparkSession, sf_dir: str) -> DataFrame:
     rotation → PQ ADC candidates in ROTATED space → exact rerank on
     ORIGINAL vectors. This registry twin uses a fixed Householder
     rotation + stride codebooks so the full pipeline hash-checks against
-    DuckDB; the learned rotation (train_opq, Procrustes) shares the same
-    operators and is recall/orthogonality-gated in tests/test_opq.py."""
+    DuckDB. The learned rotation (train_opq, Procrustes) is
+    orthogonality/error-gated in tests/test_opq.py and recall-gated on a
+    collection in tests/test_two_phase_collection.py."""
     from write_optimized_vector_database_spark.operators.pq import (
         codebooks_from_stride,
         householder_rotate,
@@ -1068,7 +1069,10 @@ def _filtered_2p_collection(spark: SparkSession, sf_dir: str):
     hit = _FILTERED_2P_DIRS.get(sf_dir)
     if hit is not None:
         cached = VectorCollection(spark, hit[0], metric="ip")
-        if os.path.isdir(cached._stable_index_path()):
+        meta = cached._meta()
+        if "index_stable_path" in meta and os.path.isdir(
+            cached._stable_index_path(meta)
+        ):
             return cached, hit[1]
     tmp = tempfile.mkdtemp(prefix="filtered2p_")
     atexit.register(shutil.rmtree, tmp, ignore_errors=True)
@@ -3790,7 +3794,10 @@ def _rebuild_under_ingest_collection(spark: SparkSession, sf_dir: str):
     hit = _REBUILD_DIRS.get(sf_dir)
     if hit is not None:
         cached = VectorCollection(spark, hit, metric="ip")
-        if os.path.isdir(cached._stable_index_path()):
+        meta = cached._meta()
+        if "index_stable_path" in meta and os.path.isdir(
+            cached._stable_index_path(meta)
+        ):
             return cached
     tmp = tempfile.mkdtemp(prefix="rebuild_ui_")
     atexit.register(shutil.rmtree, tmp, ignore_errors=True)
